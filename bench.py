@@ -175,7 +175,7 @@ def warmup_session(spark, sf_dir: str) -> None:
     # stages) on synthetic keys: its first invocation pays ~2x its
     # steady cost in stage compilation (q_group_percentiles measured
     # 4.11x cold vs 1.93x warm at sf1 with the plan itself adjudicated
-    # optimal by scripts/grouppct_probe.py). Generic operator warmup
+    # optimal by the probe of commit 356989d). Generic operator warmup
     # over range data — not any registered query's plan.
     from open_rust_timeseries_db_spark.operators.percentiles import (
         nearest_rank_percentiles_by,

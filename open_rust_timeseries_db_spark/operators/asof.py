@@ -187,7 +187,7 @@ def asof_join_same_source(
     tag each row in the scan projection and go straight to the ordered
     window. Measured at sf1 (200k/200k rows from a 1M-row events scan,
     15k keys): 2.6x faster cold, 1.9x warm than the two-scan window
-    path (scripts/asof_probe.py).
+    path (commit 3555e21).
 
     ``left_pred`` / ``right_pred`` must be disjoint; a row matching
     both is treated as LEFT only (``when`` order), which differs from

@@ -269,10 +269,9 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(transitive closure + MIN), so the whole iterative pipeline is "
     "value-checked bit-for-bit. Iteration count = component diameter; "
     "see graph.py for the O(log^2 n) large-star/small-star scale path.",
+    # "iterative": the CC fixpoint iterates INSIDE the build, so the
+    # plan is never memoized (see registry.query).
     tags=("dedup", "clusters", "iterative"),
-    # The CC fixpoint iterates INSIDE the build; a memoized plan would
-    # skip the iteration on repeat invocations (see registry.query).
-    memo_plan=False,
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from open_rust_timeseries_db_spark.functions.text_kernels import (

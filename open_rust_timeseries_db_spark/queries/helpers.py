@@ -5,17 +5,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_rust_timeseries_db_spark import session_cache
 from open_rust_timeseries_db_spark.queries.registry import DEC
 from open_rust_timeseries_db_spark.sources.catalog import load_table
-
-
-# (appId, sf_dir) -> the analyzed events+ts_us frame. A DataFrame
-# method call costs ~20-30 ms of JVM analysis even on a catalog-cached
-# table (measured round 8: withColumn 16-22 ms, filter 23-31 ms steady)
-# and ~40 queries start from this exact projection — memoizing the
-# OBJECT removes that fixed cost from every events consumer's cold
-# build, same policy as sources/catalog._TABLE_CACHE one level down.
-_EVENTS_US_CACHE: dict[tuple, DataFrame] = {}
 
 
 def events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -27,16 +19,18 @@ def events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    df = _EVENTS_US_CACHE.get(key)
-    if df is None:
-        df = load_table(spark, sf_dir, "events").selectExpr(
+    # A DataFrame method call costs ~20-30 ms of JVM analysis even on a
+    # catalog-cached table (measured round 8: withColumn 16-22 ms,
+    # filter 23-31 ms steady) and ~40 queries start from this exact
+    # projection, so the session cache keeps the OBJECT.
+    return session_cache.memo(
+        spark,
+        os.path.abspath(sf_dir),
+        session_cache.EVENTS,
+        build=lambda: load_table(spark, sf_dir, "events").selectExpr(
             "*", "ts div 1000 AS ts_us"
-        )
-        _EVENTS_US_CACHE[key] = df
-        while len(_EVENTS_US_CACHE) > 8:
-            _EVENTS_US_CACHE.pop(next(iter(_EVENTS_US_CACHE)))
-    return df
+        ),
+    )
 
 
 def conversion_proj_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,7 +47,7 @@ def conversion_proj_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     HashPartitioning(user_id), which satisfies the window's clustered
     distribution, leaving only a nearly-sorted in-partition sort.
     Measured at sf1: the raw scan+filter alone costs 0.23 s warm
-    (scripts/asof_decomp.py) — more than DuckDB's entire native ASOF —
+    (commit 3555e21) — more than DuckDB's entire native ASOF —
     while the cached projection serves it in ~0.03 s.
 
     At 100 TB this is an ingest-maintained clustered materialization

@@ -199,7 +199,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both sides are subsets of ONE events scan — the same-source
     # operator tags rows in the scan projection instead of scanning
-    # twice and unioning (2.6x faster cold at sf1, scripts/asof_probe.py;
+    # twice and unioning (2.6x faster cold at sf1, commit 3555e21;
     # equality vs the two-sided operator is hypothesis-tested). The
     # input is the session-cached conversion projection (key-partitioned
     # + sorted), so the window plans exchange-free.

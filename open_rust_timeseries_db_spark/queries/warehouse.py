@@ -128,8 +128,8 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the order attributes as first(): orders is unique per orderkey,
     # so o_orderdate/o_orderpriority are constant within each group
     # and first() is deterministic — same rows, skinnier hash-agg key.
-    # Adopted from scripts/ship_preagg_probe.py ("preagg_semi",
-    # SHIP_PREAGG_PROBE.json): measured best of four join/agg shapes
+    # Adopted from the "preagg_semi" variant of
+    # SHIP_PREAGG_PROBE.json: measured best of four join/agg shapes
     # at sf1 (0.93 s vs 1.01 s median, tightest spread); the probe
     # also REJECTED pre-aggregating lineitem before the join (2.9x
     # slower — the extra orderkey shuffle dwarfs the probe-side

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from open_rust_timeseries_db_spark import session_cache
 from open_rust_timeseries_db_spark.sources.catalog import TABLES
 
 # Demo feed defaults mirroring the reference demo topology
@@ -61,11 +62,6 @@ def market_data_stream(
     )
 
 
-# Memoized ts-encoding peeks for events_file_stream, keyed by
-# (applicationId, sf_dir): testdata files are immutable per session.
-_FILE_TS_CACHE: dict[tuple[str, str], T.DataType] = {}
-
-
 def events_file_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -80,26 +76,23 @@ def events_file_stream(
     from open_rust_timeseries_db_spark.sources.catalog import (
         _ensure_read_confs,
         _ts_to_epoch_nanos,
+        read_schema,
     )
 
     _ensure_read_confs(spark)
     # The stream-source schema must match the FILE's ts encoding (the
     # batch reader infers it; a stream reader cannot). Peek at the file
-    # with a one-off batch read, then normalize to the engine schema
-    # (ts = epoch-nanos long) exactly like sources/catalog.load_table.
-    # The peek is a driver footer read — memoized per (app, path)
-    # because the file is immutable for the session and every stream
-    # query pays it otherwise (6 oracle queries x 2 bench passes).
-    peek_key = (spark.sparkContext.applicationId, sf_dir)
-    file_ts = _FILE_TS_CACHE.get(peek_key)
-    if file_ts is None:
-        file_ts = (
-            spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            .schema["ts"]
-            .dataType
-        )
-        _FILE_TS_CACHE[peek_key] = file_ts
-    read_schema = T.StructType(
+    # footer, then normalize to the engine schema (ts = epoch-nanos
+    # long) exactly like sources/catalog.load_table.
+    file_ts = session_cache.memo(
+        spark,
+        os.path.abspath(sf_dir),
+        session_cache.STREAM_TS,
+        build=lambda: read_schema(
+            spark, os.path.join(sf_dir, "events.parquet")
+        )["ts"].dataType,
+    )
+    stream_schema = T.StructType(
         [
             T.StructField(f.name, file_ts if f.name == "ts" else f.dataType)
             for f in TABLES["events"].fields
@@ -109,7 +102,7 @@ def events_file_stream(
     # only accepts a directory path, so stream the sf_dir and glob-filter
     # down to the events table file.
     reader = (
-        spark.readStream.schema(read_schema)
+        spark.readStream.schema(stream_schema)
         .option("pathGlobFilter", "events.parquet")
         .option("recursiveFileLookup", "false")
     )

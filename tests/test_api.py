@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from open_rust_timeseries_db_spark import session_cache
 from open_rust_timeseries_db_spark.api import Table
 
 MARKET_SCHEMA = T.StructType(
@@ -271,9 +272,8 @@ def test_get_stats_contract(spark):
 def test_plan_memo_skips_streaming_and_iterative_tags():
     """The prepared-plan memo must never wrap queries that do real work
     at build time: 'streaming' (the drain IS the query) and 'iterative'
-    (driver-side loops) are tag-guarded even if the author forgets
-    memo_plan=False (round-5 advice: q_dedup_clusters needed a manual
-    opt-out despite carrying the tag)."""
+    (driver-side loops) are tag-guarded (round-5 advice: q_dedup_clusters
+    once needed a manual opt-out despite carrying the tag)."""
     from open_rust_timeseries_db_spark.queries import all_queries
 
     qs = all_queries()
@@ -285,7 +285,7 @@ def test_plan_memo_skips_streaming_and_iterative_tags():
 
 
 def test_plan_memo_is_bounded():
-    """The per-query plans dict must not grow without bound across
+    """A query's memoized plans must not grow without bound across
     sf_dirs (round-5 advice): after touching >4 distinct sf_dir keys,
     only the most recent 4 are retained."""
     from open_rust_timeseries_db_spark.queries.registry import (
@@ -321,6 +321,51 @@ def test_plan_memo_is_bounded():
         assert len(calls) == 7, "evicted entry should rebuild"
     finally:
         REGISTRY.pop("q_memo_bound_probe", None)
+        session_cache._GROUPS.pop((session_cache.PLAN, "q_memo_bound_probe"), None)
+
+
+def test_refused_session_conf_fails_build_and_stays_scoped(spark):
+    """An override Spark refuses (a static conf) must fail the build, not
+    leave the query running under the wrong confs; the override applied
+    before it must still be restored when the next query builds."""
+    from pyspark.errors import AnalysisException
+
+    from open_rust_timeseries_db_spark.queries.registry import (
+        REGISTRY,
+        query,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    baseline = spark.conf.get(key)
+    seen = []
+    names = ("q_conf_refused_probe", "q_conf_after_probe")
+    try:
+
+        @query(
+            names[0],
+            oracle=None,
+            tags=("test",),
+            session_confs={
+                key: str(int(baseline) + 3),
+                "spark.sql.codegen.cache.maxEntries": "10",
+            },
+        )
+        def refused(spark, sf_dir):
+            return object()
+
+        @query(names[1], oracle=None, tags=("test",))
+        def after(spark, sf_dir):
+            seen.append(spark.conf.get(key))
+            return object()
+
+        with pytest.raises(AnalysisException):
+            REGISTRY[names[0]].fn(spark, "/tmp/conf-probe")
+        REGISTRY[names[1]].fn(spark, "/tmp/conf-probe")
+        assert seen == [baseline]
+    finally:
+        for name in names:
+            REGISTRY.pop(name, None)
+            session_cache._GROUPS.pop((session_cache.PLAN, name), None)
 
 
 def test_flush_failure_restores_fifo_and_clears_backpressure(spark, tmp_path):

@@ -118,8 +118,9 @@ def test_kernel_cache_evicts_and_isolates(spark, monkeypatch):
     table for another, (b) unpersist displaced entries, and (c) stay
     correct after eviction (recompute on re-request)."""
     import open_rust_timeseries_db_spark.functions.text_kernels as tk
+    from open_rust_timeseries_db_spark import session_cache
 
-    monkeypatch.setattr(tk, "_CKPT_CACHE_MAX", 1)
+    monkeypatch.setattr(session_cache, "CKPT_MAX", 1)
     df1 = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
     df2 = spark.createDataFrame([(2, "v w x y z")], "doc_id long, text string")
     a1 = tk.shingle_hashes_ckpt(df1)
