@@ -53,77 +53,11 @@ def cosine_fx(a: Column | str, b: Column | str) -> Column:
     to the division is derived from exact integer sums, so the result is
     bit-identical across engines computing the same formula.
 
-    Plan note: norm2_fx here is re-evaluated per PAIR. For pair-join
-    queries, precompute norms once per vector on each side and use
-    :func:`dot_fx_pd` + :func:`cosine_from_parts` instead.
+    Plan note: norm2_fx here is re-evaluated per PAIR. The pair-join
+    queries use the Arrow block kernels below, which take each norm once
+    per vector.
     """
     return dot_fx(a, b) / (F.sqrt(norm2_fx(a)) * F.sqrt(norm2_fx(b)))
-
-
-def _make_dot_fx_pd():
-    """Arrow-vectorized fixed-point dot: batches of float32 array pairs
-    -> BIGINT sum of floor(a_k*b_k*1e12).
-
-    Bit-identical to the JVM fold: float32 -> float64 widening is exact,
-    the f64 product is the same IEEE op, np.floor == SQL FLOOR, and the
-    int64 sum is exact (|product| * 1e12 << 2^53, so the f64 floor is
-    exact too). The higher-order-function fold is interpreted per
-    element on the JVM; this path does the same arithmetic in C at
-    ~100x the throughput — the designated hot path for pair-joined
-    similarity queries.
-    """
-    import numpy as np  # deferred: keep module import light
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    def dot_fx_pd(a, b):
-        if len(a) == 0:
-            return pd.Series([], dtype="int64")
-        am = np.vstack([np.asarray(x, dtype=np.float64) for x in a])
-        bm = np.vstack([np.asarray(x, dtype=np.float64) for x in b])
-        prods = am * bm
-        fx = np.floor(prods * FX_SCALE).astype(np.int64)
-        return pd.Series(fx.sum(axis=1), dtype="int64")
-
-    # Real class objects (not strings) so PySpark's type-hint inference
-    # resolves the scalar pandas-UDF signature.
-    dot_fx_pd.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf(dot_fx_pd, "bigint")
-
-
-_DOT_FX_PD = None
-
-
-def dot_fx_pd(a: Column | str, b: Column | str) -> Column:
-    """Fixed-point dot product as a raw BIGINT (scale 1e12), vectorized
-    via Arrow. Use with :func:`cosine_from_parts` on pair joins."""
-    global _DOT_FX_PD
-    if _DOT_FX_PD is None:
-        _DOT_FX_PD = _make_dot_fx_pd()
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return _DOT_FX_PD(a, b)
-
-
-def norm2_fx_raw(a: Column | str) -> Column:
-    """Fixed-point squared-norm as the raw BIGINT sum (scale 1e12).
-
-    Compute this ONCE per vector (it is a JVM fold, fine at
-    one-eval-per-row) and carry it through the pair join.
-    """
-    a = F.col(a) if isinstance(a, str) else a
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return _fx_sum(sq)
-
-
-def cosine_from_parts(dot_raw: Column, n2a_raw: Column, n2b_raw: Column) -> Column:
-    """cos from raw BIGINT fx parts — mirrors the oracle formula
-    (dot/1e12) / (sqrt(n2a/1e12) * sqrt(n2b/1e12)) op for op."""
-    return (dot_raw.cast("double") / F.lit(FX_SCALE)) / (
-        F.sqrt(n2a_raw.cast("double") / F.lit(FX_SCALE))
-        * F.sqrt(n2b_raw.cast("double") / F.lit(FX_SCALE))
-    )
 
 
 def _driver_rows(df_or_rows, *cols):

@@ -169,36 +169,6 @@ def shingle_profile(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, sig_0..sig_P-1): min affine-permuted md5 base hash per perm."""
-    prof = shingle_profile(docs, id_col, text_col)
-    return prof.select(
-        F.col("id").alias(id_col), *[f"sig_{i}" for i in range(MINHASH_PERMS)]
-    )
-
-
-def _band_structs(payload_cols: list[str]):
-    """Array of (band, bucket, payload...) structs from sig_* columns."""
-    rows_per_band = MINHASH_PERMS // MINHASH_BANDS
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[
-                        F.col(f"sig_{b * rows_per_band + r}")
-                        for r in range(rows_per_band)
-                    ]
-                ).alias("bucket"),
-                *[F.col(c) for c in payload_cols],
-            )
-            for b in range(MINHASH_BANDS)
-        ]
-    )
-
-
 def _expand_pairs(
     groups: DataFrame, fields: list[str], keys: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -541,22 +511,6 @@ def salted_group_pairs(
         .drop("__i", "__j", "__salt_a", "__salt_b")
     )
     return cold_pairs.unionByName(hot_pairs)
-
-
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Banded bucket grouping -> distinct (a, b) candidate pairs, a < b.
-
-    One shuffle (the band/bucket groupBy) + the distinct; the signature
-    input is executed once, unlike a bucket self-join which runs it per
-    side.
-    """
-    bands = sigs.withColumnRenamed(id_col, "id").select(
-        F.explode(_band_structs(["id"])).alias("bb")
-    ).select("bb.band", "bb.bucket", "bb.id")
-    groups = bands.groupBy("band", "bucket").agg(
-        F.collect_list(F.struct("id")).alias("ms")
-    )
-    return _expand_pairs(groups, []).distinct()
 
 
 def minhash_neardup(

@@ -11,7 +11,7 @@ ONE-SIDED: est(k) >= exact(k) always (a key's own rows always land in
 its cells), and est(k) <= exact(k) + e*N/WIDTH with probability
 1 - e^-DEPTH per the standard Markov argument. That one-sidedness is
 what makes it safe for skew decisions — a key the sketch calls cold IS
-cold (operators/skew.py-style salting gates never miss a hot key).
+cold (salting gates such as operators/dedupe.py's never miss a hot key).
 
 Hashing is the repo's md5-affine family (functions/text_kernels.py
 uses the same construction) — NOT xxhash64 — so a DuckDB oracle

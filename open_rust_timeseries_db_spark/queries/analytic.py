@@ -454,7 +454,7 @@ def _heavy_hitters_oracle() -> str:
     "q_heavy_hitters",
     _heavy_hitters_oracle(),
     doc="Count-min heavy hitters: the hot-key detector that sizes skew "
-    "mitigation (operators/skew.py salting, the LSH hot-bucket splits) "
+    "mitigation (the salted grouped pairs, the LSH hot-bucket splits) "
     "before a 100 TB join. The sketch grid is DEPTH x WIDTH cells "
     "regardless of input size, builds in one fully-parallel pass "
     "(map-side combine collapses each task to the grid before the "

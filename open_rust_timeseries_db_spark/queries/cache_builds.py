@@ -11,10 +11,10 @@ table), while later siblings look artificially cheap.
 
 This module is the fix: one named builder per shared artifact, each
 calling the SAME ckpt functions with the SAME parameters the queries
-use (imported constants, not copies). bench.py runs and times these as
-an explicit "cache build" phase before the per-query passes, so the
-committed BENCH/ORACLE_BENCH report charges builds to their own lines
-and per-query cold ratios reflect per-query work.
+use (imported constants, not copies). perfbench/query_sweep.py runs and
+times these as an explicit set-up phase before the per-query passes, so
+the benchmark charges builds to their own ``cache_builds.*`` lines and
+per-query cold times reflect per-query work.
 
 At 100 TB the same artifacts would be materialized tables maintained by
 an ingest-time pipeline (a metastore-registered index build), not

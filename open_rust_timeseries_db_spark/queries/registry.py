@@ -179,7 +179,8 @@ def query(
 # entries only (observed: CORRECTNESS_r01 keys == first 50 of
 # registration order). Coverage therefore ROTATES: queries are ordered
 # least-recently-checked first, derived from the committed
-# CORRECTNESS_r*.json files at the repo root — a brand-new query (no
+# CORRECTNESS_r*.json files (new rounds land at the repo root, earlier
+# ones are archived under evidence/legacy/) — a brand-new query (no
 # row ever) sorts before one checked in round 1, which sorts before one
 # checked in round 2. Self-maintaining: each round's driver output
 # re-prioritizes the next round automatically, so every query earns a
@@ -196,7 +197,8 @@ def _last_checked_round() -> dict[str, int]:
 
     out: dict[str, int] = {}
     root = Path(__file__).resolve().parent.parent.parent
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
+    for p in (*root.glob("CORRECTNESS_r*.json"),
+              *(root / "evidence" / "legacy").glob("CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)", p.name)
         if not m:
             continue

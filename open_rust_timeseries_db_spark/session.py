@@ -124,9 +124,7 @@ def get_spark(
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
     master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0") or 0
-        ) or (cpus if cpus else (os.cpu_count() or 8))
+        shuffle_partitions = cpus if cpus else (os.cpu_count() or 8)
 
     # Single-JVM local mode: the driver heap IS the executor heap.
     # On the 128 GB / 32-core bench box this resolves to 24g pre-sized
@@ -167,8 +165,8 @@ def get_spark(
             "spark.local.dir",
             os.environ.get("SPARK_LOCAL_DIRS", _default_local_dir()),
         )
-        # Catalog tables (bucketed warehouse, sources/warehouse.py) go
-        # to a scratch dir, never the repo working directory.
+        # Anything Spark writes to its catalog warehouse goes to a
+        # scratch dir, never the working directory.
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),

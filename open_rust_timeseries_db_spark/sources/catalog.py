@@ -230,6 +230,9 @@ def table_rows(sf_dir: str, name: str) -> int:
     the table can't be counted; callers must treat unknown per their
     own safe direction.
     """
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(path):
@@ -240,7 +243,8 @@ def table_rows(sf_dir: str, name: str) -> int:
                 if f.endswith(".parquet") and not f.startswith((".", "_"))
             )
         return papq.ParquetFile(path).metadata.num_rows
-    except Exception:
+    except (OSError, pa.ArrowInvalid):
+        # Missing table (FileNotFoundError) or a file that is not parquet.
         return -1
 
 

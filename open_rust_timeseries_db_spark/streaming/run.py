@@ -31,8 +31,8 @@ _SHM_CKPT_ROOT = "/dev/shm/spark-graft-ckpt"
 
 # Diagnostic: the last bounded drain's per-batch durationMs maps
 # (addBatch / queryPlanning / walCommit / ...), captured before the
-# query object goes away — scripts/floor_decomposition.py reads this
-# to attribute streaming wall time to machinery vs data work.
+# query object goes away — perfbench/query_sweep.py reads this to
+# attribute streaming wall time to machinery vs data work.
 LAST_DRAIN_PROGRESS: list[dict] = []
 
 

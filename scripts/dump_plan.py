@@ -2,15 +2,14 @@
 
 Usage: python scripts/dump_plan.py OUTDIR SUFFIX q_a q_b ... [sf_dir]
 
-Writes OUTDIR/<query>_<SUFFIX>.txt for each query. Uses the same tuned
-session + conf derivation as bench.py so the dumped plan is the one the
-bench actually runs (minus AQE's runtime re-planning, which explain
+Writes OUTDIR/<query>_<SUFFIX>.txt for each query. Uses the same
+``get_spark`` session as perfbench/run.py, so the dumped plan is the one
+the benchmark runs (minus AQE's runtime re-planning, which explain
 cannot show before execution).
 """
 
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -28,10 +27,7 @@ def main() -> None:
     from open_rust_timeseries_db_spark.queries import all_queries
     from open_rust_timeseries_db_spark.session import get_spark
 
-    raw_bytes = sum(f.stat().st_size for f in Path(sf_dir).glob("*.parquet"))
-    n_cores = os.cpu_count() or 8
-    sp = max(8, min(4 * n_cores, int(raw_bytes * 8 / (64 << 20)) or 1))
-    spark = get_spark("dump-plan", shuffle_partitions=sp)
+    spark = get_spark("dump-plan")
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
     for name in names:

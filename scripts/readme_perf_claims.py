@@ -1,5 +1,6 @@
-"""Regenerate README.md's committed-roll perf-claim block from
-ORACLE_BENCH.json — claims are computed, never hand-written.
+"""Regenerate README.md's committed-roll perf-claim blocks from
+evidence/legacy/ORACLE_BENCH.json — claims are computed, never
+hand-written.
 
 The round-8 verdict caught README prose ("committed pairing: ZERO"
 over-gate rows) drifting from the committed artifact (which had two).
@@ -7,10 +8,10 @@ Same fix as the PLAN_AUDIT lockstep: the block between the
 ORACLE_GATE_CLAIM markers is written by this script and asserted
 against a fresh recomputation by tests/test_readme_claims.py, so the
 README can only ever state what the committed ORACLE_BENCH.json
-contains.
+contains. That file is the frozen round-12 sf0.1 roll of the retired
+round bench; no tool writes it any more.
 
-Usage: python scripts/readme_perf_claims.py   (run after every
-       oracle_bench.py roll that refreshes ORACLE_BENCH.json)
+Usage: python scripts/readme_perf_claims.py
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+BENCH_PATH = ROOT / "evidence" / "legacy" / "ORACLE_BENCH.json"
 BEGIN = "<!-- ORACLE_GATE_CLAIM (generated by scripts/readme_perf_claims.py) -->"
 END = "<!-- /ORACLE_GATE_CLAIM -->"
 AGG_BEGIN = (
@@ -68,7 +70,8 @@ def compute_block(bench: dict) -> str:
         else "; ".join(f"{n} {rc:.2f}x" for n, rc in over)
     )
     lines = [
-        "Committed-roll regime stats, computed from `ORACLE_BENCH.json`"
+        "Committed-roll regime stats, computed from"
+        " `evidence/legacy/ORACLE_BENCH.json`"
         " (regenerate with `python scripts/readme_perf_claims.py`;"
         " drift fails `tests/test_readme_claims.py`):",
         "",
@@ -107,7 +110,8 @@ def compute_aggregate_block(bench: dict) -> str:
     overall = (builds + spark_cold) / oracle_cold
     cc = qs.get("q_dedup_clusters")
     lines = [
-        "Full-engine aggregate, computed from `ORACLE_BENCH.json`"
+        "Full-engine aggregate, computed from"
+        " `evidence/legacy/ORACLE_BENCH.json`"
         " (regenerate with `python scripts/readme_perf_claims.py`;"
         " drift fails `tests/test_readme_claims.py`):",
         "",
@@ -132,7 +136,7 @@ def compute_aggregate_block(bench: dict) -> str:
 
 
 def main() -> None:
-    bench = json.loads((ROOT / "ORACLE_BENCH.json").read_text())
+    bench = json.loads(BENCH_PATH.read_text())
     readme = (ROOT / "README.md").read_text()
     for begin, end, block in (
         (BEGIN, END, compute_block(bench)),

@@ -15,6 +15,7 @@ from open_rust_timeseries_db_spark.sources.catalog import (
     _ensure_read_confs,
     _file_schema,
     load_table,
+    table_rows,
 )
 
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -45,3 +46,22 @@ def test_directory_table_falls_back_to_spark_inference(spark, tmp_path):
     got = load_table(spark, str(dir_sf), "region")
     assert sorted(got.columns) == sorted(src.columns)
     assert got.count() == src.count()
+
+
+def test_table_rows_counts_footers(tmp_path):
+    """Footer row counts for a file table and a directory of chunk
+    files; -1 only for a table that is missing or not parquet."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    assert table_rows("/root/testdata/sf0.01", "events") == 10_000
+    chunks = tmp_path / "ticks.parquet" / "chunk=0"
+    chunks.mkdir(parents=True)
+    for i, n in enumerate((3, 5)):
+        papq.write_table(pa.table({"x": list(range(n))}),
+                         chunks / f"part-{i}.parquet")
+    (chunks.parent / "_SUCCESS").touch()
+    assert table_rows(str(tmp_path), "ticks") == 8
+    assert table_rows(str(tmp_path), "missing") == -1
+    (tmp_path / "junk.parquet").write_text("not parquet")
+    assert table_rows(str(tmp_path), "junk") == -1

@@ -24,7 +24,9 @@ def _load_mod():
 
 def test_readme_gate_claim_matches_committed_artifact():
     mod = _load_mod()
-    bench = json.loads((ROOT / "ORACLE_BENCH.json").read_text())
+    bench = json.loads(
+        (ROOT / "evidence" / "legacy" / "ORACLE_BENCH.json").read_text()
+    )
     readme = (ROOT / "README.md").read_text()
     for begin, end, expected in (
         (mod.BEGIN, mod.END, mod.compute_block(bench)),
@@ -75,3 +77,28 @@ def test_readme_has_no_handwritten_zero_claim():
     block."""
     readme = (ROOT / "README.md").read_text()
     assert "committed pairing: ZERO" not in readme
+
+
+def test_stated_query_counts_match_registry():
+    """Every query count README states, and the summary line of both
+    committed parity runs, equal the registry's size."""
+    from open_rust_timeseries_db_spark.queries import all_queries
+
+    n = len(all_queries())
+    readme = (ROOT / "README.md").read_text()
+    stated = [
+        int(c)
+        for pat in (
+            r"Query inventory \((\d+)\)",
+            r"\b(?i:all) (\d+)\b",
+            r"\b(\d+)/\d+ (?:green )?run\b",
+            r"\b\d+/(\d+) (?:green )?run\b",
+            r"\b(\d+) pass, 0 fail\b",
+        )
+        for c in re.findall(pat, readme)
+    ]
+    assert len(stated) >= 6, f"README count phrasings changed: {stated}"
+    assert stated == [n] * len(stated), f"README states {stated}, registry has {n}"
+    for name in ("ANSI_PARITY.txt", "CLUSTER_PARITY.txt"):
+        line = re.search(r"^== (\d+) pass", (ROOT / name).read_text(), re.M)
+        assert line and int(line.group(1)) == n, f"{name}: {line and line.group(0)}"

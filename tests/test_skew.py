@@ -1,91 +1,9 @@
-"""Skew-operator equivalence: salted two-phase results must be
-bit-identical to the single-phase plans they replace."""
+"""Salted grouped pairs (operators/dedupe.py): the salted two-phase
+plan must produce the same pair set as the unsalted grouped plan."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-
-from open_rust_timeseries_db_spark.operators.skew import (
-    replicate_salted_join,
-    salted_sum_count,
-)
-from open_rust_timeseries_db_spark.sources.catalog import load_table
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_salted_aggregation_matches_plain(spark):
-    ev = load_table(spark, SF_DIR, "events")
-    salted = salted_sum_count(ev, ["event_type"], "value", n_salts=8)
-    plain = ev.groupBy("event_type").agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    got = {r["event_type"]: (r["sum_value"], r["n"]) for r in salted.collect()}
-    want = {r["event_type"]: (r["sum_value"], r["n"]) for r in plain.collect()}
-    assert got == want  # decimal accumulation -> bit-equal doubles
-
-
-def test_salted_aggregation_on_skewed_data(spark):
-    """90% of rows on one key — the case salting exists for."""
-    df = spark.range(0, 100_000).select(
-        F.when(F.col("id") % 10 < 9, F.lit("hot")).otherwise(F.lit("cold")).alias("k"),
-        (F.col("id") % 997).cast("double").alias("v"),
-    )
-    salted = salted_sum_count(df, ["k"], "v", n_salts=32)
-    plain = df.groupBy("k").agg(
-        F.sum(F.col("v").cast("decimal(38,6)")).cast("double").alias("sum_value"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_replicate_salted_join_matches_plain(spark):
-    orders = load_table(spark, SF_DIR, "orders")
-    cust = load_table(spark, SF_DIR, "customer")
-    salted = replicate_salted_join(
-        orders.withColumnRenamed("o_custkey", "c_custkey"),
-        cust,
-        on=["c_custkey"],
-        n_salts=8,
-    )
-    plain = orders.withColumnRenamed("o_custkey", "c_custkey").join(cust, "c_custkey")
-    assert salted.count() == plain.count()
-    got = salted.agg(
-        F.sum("o_totalprice"), F.sum("c_acctbal"), F.count(F.lit(1))
-    ).collect()[0]
-    want = plain.agg(
-        F.sum("o_totalprice"), F.sum("c_acctbal"), F.count(F.lit(1))
-    ).collect()[0]
-    assert tuple(got) == tuple(want)
-
-
-def test_replicate_salted_join_left(spark):
-    orders = load_table(spark, SF_DIR, "orders").withColumnRenamed(
-        "o_custkey", "c_custkey"
-    )
-    # Restrict build side so some probe rows miss: left join must keep them.
-    cust = load_table(spark, SF_DIR, "customer").filter(F.col("c_custkey") % 2 == 0)
-    salted = replicate_salted_join(orders, cust, on=["c_custkey"], how="left")
-    plain = orders.join(cust, "c_custkey", "left")
-    assert salted.count() == plain.count()
-    assert (
-        salted.filter(F.col("c_name").isNull()).count()
-        == plain.filter(F.col("c_name").isNull()).count()
-    )
-
-
-def test_replicate_salted_join_rejects_outer(spark):
-    """right/full outer would surface each unmatched build row once per
-    salt (n_salts null-extended duplicates) — must be rejected."""
-    orders = load_table(spark, SF_DIR, "orders").withColumnRenamed(
-        "o_custkey", "c_custkey"
-    )
-    cust = load_table(spark, SF_DIR, "customer")
-    for how in ("right", "full", "outer", "right_outer", "full_outer"):
-        with pytest.raises(ValueError, match="inner"):
-            replicate_salted_join(orders, cust, on=["c_custkey"], how=how)
 
 
 def test_salted_pairs_cms_sizing_matches_exact_and_drops_a_shuffle(
