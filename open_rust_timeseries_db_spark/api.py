@@ -1,10 +1,11 @@
-"""Reference-compatible ingest API: the Table surface, Spark-native.
+"""Reference-compatible ingest API: the Table surface, Arrow at the edge.
 
 The reference's entire public API is four calls (reference
 src/storage/table.rs:34-115): ``Table::new(name, config)``,
 ``write_record(record) -> bool``, ``read_one_record() -> Option<record>``,
 ``record_count()`` / ``capacity()``. This module gives a user of that
-API the same surface with the footguns fixed and Spark underneath:
+API the same surface with the footguns fixed and columnar storage
+behind it:
 
 - **typed, validated schema** — the reference declares
   ``field_size_bytes`` but never checks it, silently drops unknown
@@ -23,15 +24,20 @@ API the same surface with the footguns fixed and Spark underneath:
   here cannot tear by construction;
 - **MPMC thread safety** — one mutex instead of the reference's
   lock-free CAS protocol. Intentional: this facade is the driver-side
-  INGEST EDGE, not the engine. Analytics throughput comes from the
-  cluster (``to_df``/``flush_to_parquet`` hand records to Spark's
-  partitioned execution); a CAS ring on the driver would optimize the
-  wrong side. Per-call overhead is micro-benchmarked in
+  INGEST EDGE, not the engine; a CAS ring on the driver would optimize
+  the wrong side. Per-call overhead is micro-benchmarked in
   tests/test_api.py against the reference's published targets.
 
-At scale the durable path is ``flush_to_parquet`` (micro-batch
-commits — each flush is one atomic parquet append) or the streaming
-layer (streaming/) for continuous feeds.
+Buffered rows leave through one Arrow builder (:func:`_arrow_table`,
+Spark's own Arrow mapping of the schema). ``flush_to_parquet`` writes
+them as one parquet file on the driver with pyarrow — no Spark job, no
+Python worker — which is right at any table size because a flush holds
+at most ``capacity`` rows; the file carries Spark's schema in its
+footer, so Spark scans read it as their own. ``to_df`` hands the same
+Arrow table to ``createDataFrame``. Analytics over flushed data run on
+the cluster (``sources/layout.append_time_layout`` +
+``read_time_range``, or the streaming layer in streaming/ for
+continuous feeds).
 """
 
 from __future__ import annotations
@@ -44,6 +50,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+# Field types a Table accepts, with the Python values each admits: the
+# types the Arrow builder converts exactly.
 _PY_OK: dict[type, tuple[type, ...]] = {
     T.LongType: (int,),
     T.IntegerType: (int,),
@@ -53,6 +61,21 @@ _PY_OK: dict[type, tuple[type, ...]] = {
     T.BinaryType: (bytes, bytearray),
     T.BooleanType: (bool,),
 }
+
+
+def _arrow_table(schema: T.StructType, rows: list[tuple[Any, ...]]):
+    """``rows`` (tuples in field order) as one ``pyarrow.Table`` typed by
+    Spark's own Arrow mapping of ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(schema)
+    if not rows:
+        return pa_schema.empty_table()
+    return pa.Table.from_arrays(
+        [pa.array(col, f.type) for col, f in zip(zip(*rows), pa_schema)],
+        schema=pa_schema,
+    )
 
 
 class Table:
@@ -72,6 +95,12 @@ class Table:
             raise ValueError(
                 f"overflow must be 'reject-new' or 'drop-oldest', got {overflow!r}"
             )
+        for f in schema.fields:
+            if type(f.dataType) not in _PY_OK:
+                raise TypeError(
+                    f"{name}.{f.name}: unsupported field type "
+                    f"{f.dataType.simpleString()}"
+                )
         self.spark = spark
         self.name = name
         self.schema = schema
@@ -91,19 +120,17 @@ class Table:
         self._r_ns_sum = 0
         self._r_ns_max = 0
         self._n_reads = 0
-        # True while a flush_to_parquet is in flight: writes are
-        # rejected (backpressure) so a failed flush can always restore
-        # its drained rows without exceeding capacity.
-        self._flushing = False
+        # Held by the one flush_to_parquet in flight; never by writers.
+        self._flush_lock = threading.Lock()
 
     # -- reference surface ------------------------------------------------
 
     def write_record(self, record: dict[str, Any]) -> bool:
-        """Append one record. When the buffer is full: ``reject-new``
-        returns False; ``drop-oldest`` evicts the oldest record and
-        returns True (reference README.md:16's alternative policy).
-        While a flush is in flight writes return False (backpressure)
-        so a failed flush can restore without breaching capacity.
+        """Append one record. A full buffer (``capacity`` records or
+        more) is the only reason a write is refused: ``reject-new``
+        returns False; ``drop-oldest`` evicts the oldest records until
+        the new one fits and returns True (reference README.md:16's
+        alternative policy). Writes go on while a flush is in flight.
 
         Raises on unknown or missing fields and type mismatches — the
         validation the reference declares but never enforces
@@ -118,11 +145,10 @@ class Table:
         row = []
         for fname, field in self._fields.items():
             value = record[fname]
-            ok = _PY_OK.get(type(field.dataType))
             if value is None:
                 if not field.nullable:
                     raise TypeError(f"{self.name}.{fname}: null in non-nullable field")
-            elif ok is not None and not isinstance(value, ok):
+            elif not isinstance(value, _PY_OK[type(field.dataType)]):
                 raise TypeError(
                     f"{self.name}.{fname}: {type(value).__name__} incompatible "
                     f"with {field.dataType.simpleString()}"
@@ -131,18 +157,18 @@ class Table:
         row_t = tuple(row)
         t0 = time.perf_counter_ns()
         with self._lock:
-            if self._flushing:
-                return False
             if len(self._buf) >= self._capacity:
                 if self._overflow == "reject-new":
                     return False
-                self._buf.popleft()
+                # A failed flush's restore can leave more than capacity.
+                while len(self._buf) >= self._capacity:
+                    self._buf.popleft()
             self._buf.append(row_t)
             # Latency is recorded for SUCCESSFUL writes only, like the
             # reference (it times inside the `if write_record(..)`
-            # branch, src/tests/integration_test.rs:180-182); rejected
-            # writes (flushing / reject-new) return above and leave the
-            # stats untouched.
+            # branch, src/tests/integration_test.rs:180-182); writes
+            # rejected by reject-new return above and leave the stats
+            # untouched.
             dt = time.perf_counter_ns() - t0
             self._w_ns_sum += dt
             self._n_writes += 1
@@ -213,42 +239,49 @@ class Table:
     def is_full(self) -> bool:
         return self.record_count() >= self._capacity
 
-    # -- Spark handoff (the part the reference never had) ------------------
+    # -- columnar handoff (the part the reference never had) --------------
 
     def to_df(self) -> DataFrame:
-        """Snapshot the live buffer as a DataFrame (non-destructive)."""
+        """Snapshot the live buffer as a DataFrame (non-destructive),
+        handed to Spark as one Arrow table."""
         with self._lock:
             rows = list(self._buf)
-        return self.spark.createDataFrame(rows, self.schema)
+        return self.spark.createDataFrame(_arrow_table(self.schema, rows))
 
     def flush_to_parquet(self, path: str) -> int:
-        """Drain the buffer into one atomic parquet append (micro-batch
-        commit); returns the number of records flushed.
+        """Drain up to ``capacity`` records, oldest first, into one new
+        parquet file in ``path`` (a micro-batch commit); returns the
+        number of records flushed.
 
-        The drained rows are restored to the front of the buffer if the
-        write fails, so a flush never loses records and never races a
-        concurrent ``read_one_record`` (the drain itself is atomic).
-        While the flush is in flight ``write_record`` returns False
-        (backpressure): the buffer cannot refill mid-flush, so the
-        failure-path restore can never push it above capacity.
+        The file is written on the driver through Arrow
+        (``sources/io.write_arrow_parquet``): no Spark job runs, and the
+        file appears under its final name only once complete. Writes go
+        on during the flush. If the write fails, the drained rows go back
+        to the front of the buffer, so a flush never loses records and
+        never races a concurrent ``read_one_record`` (the drain itself is
+        atomic). The buffer may then hold up to ``capacity`` plus the
+        failed batch; writes are refused (``reject-new``) or evict
+        (``drop-oldest``) until it is below ``capacity`` again. One flush
+        runs at a time: a concurrent call returns 0.
         """
-        with self._lock:
-            if self._flushing:
-                return 0
-            rows = list(self._buf)
-            self._buf.clear()
+        from open_rust_timeseries_db_spark.sources.io import write_arrow_parquet
+
+        if not self._flush_lock.acquire(blocking=False):
+            return 0
+        try:
+            with self._lock:
+                n = min(len(self._buf), self._capacity)
+                rows = [self._buf.popleft() for _ in range(n)]
             if not rows:
                 return 0
-            self._flushing = True
-        try:
-            self.spark.createDataFrame(rows, self.schema).write.mode(
-                "append"
-            ).parquet(path)
-        except Exception:
-            with self._lock:
-                self._buf.extendleft(reversed(rows))
-                self._flushing = False
-            raise
-        with self._lock:
-            self._flushing = False
-        return len(rows)
+            try:
+                write_arrow_parquet(
+                    _arrow_table(self.schema, rows), path, self.schema
+                )
+            except Exception:
+                with self._lock:
+                    self._buf.extendleft(reversed(rows))
+                raise
+            return len(rows)
+        finally:
+            self._flush_lock.release()

@@ -13,6 +13,9 @@ partitioning columns for pruning, no coalesce(1)-style driver funnels.
 
 from __future__ import annotations
 
+import os
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -69,6 +72,36 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+
+
+def write_arrow_parquet(table, directory: str, schema: T.StructType) -> str:
+    """Write the Arrow ``table`` as one snappy parquet file in
+    ``directory`` on the driver, with no Spark job; returns its path.
+
+    The footer carries ``schema`` under Spark's own row-metadata key, so
+    ``spark.read.parquet`` reads the file with the Spark schema it would
+    have written itself. The file is written under a hidden name (Spark
+    lists no ``.``-prefixed file) and renamed into place, so a concurrent
+    reader never lists a partial file. For small driver-side batches
+    only: every row passes through this process.
+    """
+    import pyarrow.parquet as pq
+
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.snappy.parquet"
+    final = os.path.join(directory, name)
+    tmp = os.path.join(directory, f".{name}.tmp")
+    meta = {"org.apache.spark.sql.parquet.row.metadata": schema.json()}
+    try:
+        pq.write_table(
+            table.replace_schema_metadata(meta), tmp, compression="snappy"
+        )
+        os.rename(tmp, final)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return final
 
 
 def write_csv(

@@ -39,6 +39,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +51,12 @@ _CHUNK_COL = "chunk_us"
 
 DAY_US = 86_400_000_000
 HOUR_US = 3_600_000_000
+
+# A plain parquet file scan below this many bytes appends on the driver
+# (pyarrow sort + write, no Spark job). Decoded and sorted, 64 MB of
+# snappy parquet stays a few hundred MB of driver memory, well inside a
+# 2 GB driver; larger inputs keep the Spark job.
+_LOCAL_APPEND_MAX_BYTES = 64 << 20
 
 
 def write_time_layout(
@@ -282,6 +289,110 @@ def read_manifest(path: str) -> dict:
         return json.load(f)
 
 
+def _driver_rows(df: DataFrame, man: dict):
+    """The rows of ``df`` as one Arrow table, or None when the append
+    must run as a Spark job.
+
+    Driver-side only for a plain scan of local parquet files (the
+    optimized plan is a single leaf) totalling under
+    ``_LOCAL_APPEND_MAX_BYTES``, appended into a time layout (no
+    ``order`` in the manifest) whose integer ts column holds no nulls,
+    and only when the files decode to the Arrow types Spark's schema
+    maps to, so the rewrite is exact.
+    """
+    if man.get("order") or df._jdf.queryExecution().optimizedPlan().children().size():
+        return None
+    urls = [urlparse(f) for f in df.inputFiles()]
+    if not urls or any(
+        u.scheme != "file" or not u.path.endswith(".parquet") for u in urls
+    ):
+        return None
+    paths = [unquote(u.path) for u in urls]
+    if sum(os.path.getsize(p) for p in paths) >= _LOCAL_APPEND_MAX_BYTES:
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    want = to_arrow_schema(df.schema)
+    parts = []
+    for p in paths:
+        part = pq.read_table(p)
+        if not set(want.names) <= set(part.column_names):
+            return None  # e.g. partition columns, held in directory names
+        part = part.select(want.names)
+        if part.schema.types != want.types:
+            return None
+        parts.append(part.cast(want))
+    rows = pa.concat_tables(parts)
+    ts = rows.column(man["ts_col"])
+    if not pa.types.is_integer(ts.type) or ts.null_count:
+        return None
+    return rows
+
+
+def _write_chunk_files(rows, man: dict, schema, directory: str) -> None:
+    """Write the Arrow ``rows`` into ``directory`` as the Spark path's
+    partitioned write would: ``chunk_us=<chunk>/`` directories holding
+    ts-sorted files, here one file per chunk, each committed by rename
+    (``sources/io.write_arrow_parquet``)."""
+    import numpy as np
+
+    from open_rust_timeseries_db_spark.sources.io import write_arrow_parquet
+
+    os.makedirs(directory, exist_ok=True)
+    ts = rows.column(man["ts_col"]).to_numpy().astype(np.int64, copy=False)
+    order = np.argsort(ts, kind="stable")
+    ts = ts[order]
+    # np.mod is a floor modulo: the same chunk as Spark's pmod. The chunk
+    # is nondecreasing in ts, so the ts order is the (chunk, ts) order.
+    chunk = ts - np.mod(ts, man["chunk_us"])
+    rows = rows.take(order)
+    cuts = [0, *(np.flatnonzero(np.diff(chunk)) + 1).tolist(), len(ts)]
+    for lo, hi in zip(cuts, cuts[1:]):
+        write_arrow_parquet(
+            rows.slice(lo, hi - lo),
+            os.path.join(directory, f"{_CHUNK_COL}={int(chunk[lo])}"),
+            schema,
+        )
+
+
+def _spark_append_writer(
+    df: DataFrame, man: dict, n_range_partitions: int | None
+):
+    """The Spark job that writes ``df`` into a directory as chunk
+    partitions, range-split and sorted by the manifest's order, as a
+    function of that directory."""
+    ts_col, chunk_us = man["ts_col"], man["chunk_us"]
+    chunk = (F.col(ts_col) - F.pmod(F.col(ts_col), F.lit(chunk_us))).cast(
+        "long"
+    )
+    order = man.get("order")
+    out = df.withColumn(_CHUNK_COL, chunk)
+    n = n_range_partitions or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    if order and order.get("type") == "zorder":
+        cols = [F.col(c) for c in order["cols"]]
+        bounds = [tuple(b) for b in order["bounds"]]
+        out = out.withColumn(
+            "__z", zorder_key(cols, bounds, order["bits"])
+        )
+        sort_cols = [_CHUNK_COL, "__z"]
+    else:
+        sort_cols = [_CHUNK_COL, ts_col]
+    out = out.repartitionByRange(n, *sort_cols).sortWithinPartitions(
+        *sort_cols
+    )
+    if "__z" in out.columns:
+        out = out.drop("__z")
+
+    def write(directory: str) -> None:
+        out.write.mode("append").partitionBy(_CHUNK_COL).parquet(directory)
+
+    return write
+
+
 def append_time_layout(
     df: DataFrame,
     path: str,
@@ -319,33 +430,26 @@ def append_time_layout(
     converges to replace-semantics (the prior payload is dropped),
     not a union. Batch appends (``None``) write plain files straight
     into the chunk directories.
+
+    **Driver path.** A small plain file scan — ``df`` is
+    ``spark.read.parquet(...)`` of local parquet files under
+    ``_LOCAL_APPEND_MAX_BYTES`` in total, appended into a time layout
+    (not Z-order) with no null timestamps — is read, sorted and written
+    with pyarrow on the driver, one ts-sorted file per chunk, each
+    committed by rename: no Spark job. Only the "write partitioned files
+    into a directory" step differs; the ``ingest_id`` staging and swap
+    below are the same for both paths. Every other input (filtered or
+    derived frames, Z-order layouts, null timestamps, large inputs) runs
+    as a Spark job.
     """
     man = read_manifest(path)
-    ts_col, chunk_us = man["ts_col"], man["chunk_us"]
-    chunk = (F.col(ts_col) - F.pmod(F.col(ts_col), F.lit(chunk_us))).cast(
-        "long"
-    )
-    order = man.get("order")
-    out = df.withColumn(_CHUNK_COL, chunk)
-    n = n_range_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    if order and order.get("type") == "zorder":
-        cols = [F.col(c) for c in order["cols"]]
-        bounds = [tuple(b) for b in order["bounds"]]
-        out = out.withColumn(
-            "__z", zorder_key(cols, bounds, order["bits"])
-        )
-        sort_cols = [_CHUNK_COL, "__z"]
+    rows = _driver_rows(df, man)
+    if rows is not None:
+        write = functools.partial(_write_chunk_files, rows, man, df.schema)
     else:
-        sort_cols = [_CHUNK_COL, ts_col]
-    out = out.repartitionByRange(n, *sort_cols).sortWithinPartitions(
-        *sort_cols
-    )
-    if "__z" in out.columns:
-        out = out.drop("__z")
+        write = _spark_append_writer(df, man, n_range_partitions)
     if ingest_id is None:
-        out.write.mode("append").partitionBy(_CHUNK_COL).parquet(path)
+        write(path)
         return
     prefix = f"ingest-{int(ingest_id)}-"
     # STAGE FIRST, swap after: the scratch write must fully succeed
@@ -355,7 +459,7 @@ def append_time_layout(
     # lost the batch entirely). Same stage-then-swap discipline as
     # compact_chunks.
     scratch = os.path.join(path, f".ingest-{uuid.uuid4().hex[:8]}")
-    out.write.mode("overwrite").partitionBy(_CHUNK_COL).parquet(scratch)
+    write(scratch)  # a fresh directory: append writes it whole
     try:
         staged: dict[str, list[str]] = {}
         for entry in os.listdir(scratch):

@@ -6,6 +6,7 @@ api.Table, plus the validation the reference omits.
 
 from __future__ import annotations
 
+import os
 import threading
 import time
 
@@ -139,6 +140,7 @@ def test_to_df_analytics_vwap(spark):
     assert by_symbol[100] == pytest.approx(want)
     assert by_symbol[101] == pytest.approx(want)
     assert table.record_count() == 1000  # to_df is non-destructive
+    assert df.schema == table.schema
 
 
 def test_flush_to_parquet_exactly_once(spark, tmp_path):
@@ -388,26 +390,169 @@ def test_flush_failure_restores_fifo_and_clears_backpressure(spark, tmp_path):
     assert table.read_one_record() is None
 
 
-def test_writes_rejected_while_flush_in_flight(spark, monkeypatch):
-    """write_record must return False (backpressure) while a flush is
-    draining, so the failure-path restore can never exceed capacity.
-    The in-flight window is driven deterministically by hooking the
-    flush's createDataFrame call from the same thread."""
+def test_writes_accepted_while_flush_in_flight(spark, monkeypatch, tmp_path):
+    """A flush in flight does not refuse writes: a full buffer is the only
+    reason write_record returns False. If the flush then fails, its rows
+    go back in front of the write made mid-flight, the table refuses
+    writes while it holds ``capacity`` or more, and it never holds more
+    than ``capacity`` + one batch. The in-flight window is driven
+    deterministically by hooking the flush's Arrow writer from the same
+    thread."""
+    import pyarrow.parquet as pq
+
     table = Table(spark, "flush_bp", MARKET_SCHEMA, capacity=8)
     for i in range(8):
         assert table.write_record(_tick(1, i))
     observed = {}
+    counts = [table.record_count()]
 
-    class _HookedSpark:
-        def createDataFrame(self, rows, schema):
-            observed["mid_flight_write"] = table.write_record(_tick(1, 42))
-            observed["count_during"] = table.record_count()
-            raise RuntimeError("abort flush after probing")
+    def hooked_write_table(*args, **kwargs):
+        counts.append(table.record_count())
+        observed["mid_flight_write"] = table.write_record(_tick(1, 42))
+        counts.append(table.record_count())
+        raise RuntimeError("abort flush after probing")
 
-    monkeypatch.setattr(table, "spark", _HookedSpark())
+    monkeypatch.setattr(pq, "write_table", hooked_write_table)
     with pytest.raises(RuntimeError):
-        table.flush_to_parquet("/unused")
-    assert observed["mid_flight_write"] is False
-    assert observed["count_during"] == 0  # buffer drained atomically
-    assert table.record_count() == 8  # restore happened in full
-    assert table.is_full()
+        table.flush_to_parquet(str(tmp_path / "flushed"))
+    assert observed["mid_flight_write"] is True
+    assert counts[1:] == [0, 1]  # drained atomically, then the write landed
+    assert table.record_count() == 9  # 8 restored + the mid-flight write
+    assert not table.write_record(_tick(1, 43))  # full: refused
+    counts.append(table.record_count())
+    assert max(counts) <= 8 + 8  # capacity + one batch
+    drained = [table.read_one_record() for _ in range(9)]
+    assert drained == [_tick(1, i) for i in range(8)] + [_tick(1, 42)]
+    assert table.read_one_record() is None
+    assert not os.listdir(tmp_path / "flushed")  # no partial file left
+
+
+
+def test_concurrent_writes_and_failing_flushes_lose_nothing(
+    spark, monkeypatch, tmp_path
+):
+    """Stress: more producer threads than cores write while two threads
+    flush and every third Arrow write fails. Every accepted record lands
+    in exactly one flushed file, and the buffer never holds more than
+    capacity + one batch (a flush drains at most ``capacity``)."""
+    import itertools
+    import sys
+
+    import pyarrow.parquet as pq
+
+    real_write, calls = pq.write_table, itertools.count()
+
+    def flaky_write(*args, **kwargs):
+        if next(calls) % 3 == 0:
+            raise OSError("injected write failure")
+        return real_write(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "write_table", flaky_write)
+    cap, n_producers, per_producer = 64, 6, 1_000
+    table = Table(spark, "stress", MARKET_SCHEMA, capacity=cap)
+    out = str(tmp_path / "flushed")
+    done = threading.Event()
+    peak = [0]
+
+    def producer(p: int) -> None:
+        for i in range(per_producer):
+            while not table.write_record(_tick(p, i)):
+                time.sleep(0.0001)
+
+    def flusher() -> None:
+        while not done.is_set():
+            peak[0] = max(peak[0], table.record_count())
+            try:
+                table.flush_to_parquet(out)
+            except OSError:
+                pass
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        producers = [
+            threading.Thread(target=producer, args=(p,)) for p in range(n_producers)
+        ]
+        flushers = [threading.Thread(target=flusher) for _ in range(2)]
+        for t in flushers + producers:
+            t.start()
+        for t in producers:
+            t.join(timeout=120)
+        done.set()
+        for t in flushers:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in producers + flushers)
+    finally:
+        sys.setswitchinterval(old_interval)
+    while not table.is_empty():
+        try:
+            table.flush_to_parquet(out)
+        except OSError:
+            pass
+    assert peak[0] <= 2 * cap
+    back = pq.read_table(out, columns=["exchange_id", "ts_ns"]).to_pylist()
+    got = sorted((r["exchange_id"], r["ts_ns"]) for r in back)
+    assert got == sorted(
+        (p, _tick(p, i)["ts_ns"]) for p in range(n_producers) for i in range(per_producer)
+    )
+
+def test_flushed_file_has_sparks_own_schema(spark, tmp_path):
+    """A flush writes through Arrow, not Spark: Spark must still read the
+    file with the schema (names, types, field order, nullability) it reads
+    for its own write of the same rows, and the same rows back. Every
+    accepted field type appears, nullable and not."""
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), nullable=False),
+            T.StructField("qty", T.IntegerType(), nullable=False),
+            T.StructField("px", T.DoubleType(), nullable=True),
+            T.StructField("w", T.FloatType(), nullable=True),
+            T.StructField("sym", T.StringType(), nullable=True),
+            T.StructField("raw", T.BinaryType(), nullable=True),
+            T.StructField("ok", T.BooleanType(), nullable=False),
+        ]
+    )
+    rows = [
+        (
+            i,
+            i % 7,
+            None if i % 5 == 0 else i * 0.25,
+            float(i % 3),
+            None if i % 4 == 0 else f"s{i}",
+            bytes([i]),
+            i % 2 == 0,
+        )
+        for i in range(40)
+    ]
+    table = Table(spark, "typed", schema, capacity=64)
+    for r in rows:
+        assert table.write_record(dict(zip(schema.names, r)))
+    arrow_dir, spark_dir = str(tmp_path / "arrow"), str(tmp_path / "spark")
+    assert table.flush_to_parquet(arrow_dir) == 40
+    spark.createDataFrame(rows, schema).write.parquet(spark_dir)
+
+    got = spark.read.parquet(arrow_dir)
+    want = spark.read.parquet(spark_dir)
+
+    def fields(df):
+        return [(f.name, f.dataType, f.nullable) for f in df.schema.fields]
+
+    assert fields(got) == fields(want)
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == sorted(rows)
+    # One committed file, no hidden temporary left beside it.
+    (name,) = os.listdir(arrow_dir)
+    assert name.startswith("part-") and name.endswith(".snappy.parquet")
+
+
+def test_unsupported_field_type_rejected_at_construction(spark):
+    """The Arrow builder converts only the types in api._PY_OK exactly;
+    any other field type fails when the Table is made, naming the field."""
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("at", T.TimestampType(), True),
+        ]
+    )
+    with pytest.raises(TypeError, match=r"odd\.at"):
+        Table(spark, "odd", schema, capacity=4)

@@ -640,3 +640,166 @@ def test_streaming_ingest_feeds_incremental_aggregate(spark, tmp_path):
         )
     )
     assert _rows(bars[0]) == _rows(rebuilt)
+
+
+def _spy_driver_appends(monkeypatch) -> list[str]:
+    """Record the directory of every driver-path append (the pyarrow
+    chunk writer); an append absent from the list ran as a Spark job."""
+    from open_rust_timeseries_db_spark.sources import layout
+
+    calls: list[str] = []
+    real = layout._write_chunk_files
+
+    def spy(rows, man, schema, directory):
+        calls.append(directory)
+        return real(rows, man, schema, directory)
+
+    monkeypatch.setattr(layout, "_write_chunk_files", spy)
+    return calls
+
+
+def _layout_files(path: str) -> set[str]:
+    return {
+        os.path.join(entry, f)
+        for entry in os.listdir(path)
+        if entry.startswith("chunk_us=")
+        for f in os.listdir(os.path.join(path, entry))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    }
+
+
+class TestDriverAppend:
+    """A small plain file scan appends on the driver through pyarrow; the
+    files it writes must be the ones the Spark path writes, to a reader."""
+
+    COLS = ["event_id", "user_id", "ts_us", "value"]
+
+    def _events(self, spark):
+        return events_us(spark, SF_DIR).select(*self.COLS)
+
+    def test_driver_append_matches_spark_append(
+        self, spark, tmp_path, monkeypatch
+    ):
+        import pyarrow.parquet as pq
+
+        from open_rust_timeseries_db_spark.sources.layout import (
+            HOUR_US,
+            append_time_layout,
+        )
+
+        ev = self._events(spark)
+        stage = str(tmp_path / "stage")
+        ev.filter(F.col("event_id") % 3 == 1).coalesce(2).write.parquet(stage)
+        driver, by_spark = str(tmp_path / "driver"), str(tmp_path / "spark")
+        for p in (driver, by_spark):
+            write_time_layout(
+                ev.filter(F.col("event_id") % 3 == 0), p, ts_col="ts_us",
+                chunk_us=HOUR_US,
+            )
+        seeded = _layout_files(driver)
+        calls = _spy_driver_appends(monkeypatch)
+        append_time_layout(spark.read.parquet(stage), driver)
+        # The same rows as a filtered frame: not a plain scan, Spark path.
+        append_time_layout(
+            spark.read.parquet(stage).filter(F.col("event_id") % 3 == 1),
+            by_spark,
+        )
+        assert calls == [driver]
+
+        def rows(p):
+            return sorted(
+                map(tuple, read_time_range(spark, p).select(*self.COLS).collect())
+            )
+
+        assert rows(driver) == rows(by_spark)
+        assert len(rows(driver)) == ev.filter(F.col("event_id") % 3 < 2).count()
+
+        def chunks(p):
+            return {e for e in os.listdir(p) if e.startswith("chunk_us=")}
+
+        assert chunks(driver) == chunks(by_spark)
+        assert (
+            read_time_range(spark, driver).schema
+            == read_time_range(spark, by_spark).schema
+        )
+        written = _layout_files(driver) - seeded
+        assert len(written) > 1, "the batch should span several chunks"
+        for rel in written:
+            lo = int(rel.split("/")[0].split("=")[1])
+            ts = pq.read_table(os.path.join(driver, rel)).column("ts_us").to_pylist()
+            assert ts == sorted(ts), f"{rel} is not ts-sorted"
+            assert lo <= ts[0] and ts[-1] < lo + HOUR_US, f"{rel} leaks its chunk"
+
+    @pytest.mark.parametrize("case", ["null_ts", "zorder", "over_bytes"])
+    def test_other_inputs_take_the_spark_path(
+        self, spark, tmp_path, monkeypatch, case
+    ):
+        from open_rust_timeseries_db_spark.sources import layout
+
+        ev = self._events(spark)
+        seed = ev.filter(F.col("event_id") % 2 == 0)
+        batch = ev.filter(F.col("event_id") % 2 == 1)
+        path, stage = str(tmp_path / "layout"), str(tmp_path / "stage")
+        if case == "null_ts":
+            batch = batch.withColumn(
+                "ts_us", F.when(F.col("event_id") % 4 == 1, F.col("ts_us"))
+            )
+        batch.write.parquet(stage)
+        if case == "zorder":
+            layout.write_zorder_layout(
+                seed, path, ts_col="ts_us", key_col="user_id"
+            )
+        else:
+            layout.write_time_layout(seed, path, ts_col="ts_us")
+        if case == "over_bytes":
+            monkeypatch.setattr(layout, "_LOCAL_APPEND_MAX_BYTES", 1)
+        calls = _spy_driver_appends(monkeypatch)
+        layout.append_time_layout(spark.read.parquet(stage), path)
+        assert calls == []
+        assert spark.read.parquet(path).count() == ev.count()
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of the session's jobs outside any job group, once the listener
+    bus has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_flush_and_small_append_run_no_spark_job(spark, tmp_path):
+    """The tick-ingest cycle's write path runs no Spark job: a flush
+    writes through Arrow on the driver, and appending its staged file
+    scan into a time layout takes the driver path. Only the read that
+    makes the rows visible is a job."""
+    from pyspark.sql import types as T
+
+    from open_rust_timeseries_db_spark.api import Table
+    from open_rust_timeseries_db_spark.sources.layout import (
+        append_time_layout,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("sym", T.IntegerType(), False),
+            T.StructField("ts", T.LongType(), False),
+            T.StructField("px", T.DoubleType(), False),
+        ]
+    )
+    path, stage = str(tmp_path / "layout"), str(tmp_path / "stage")
+    write_time_layout(
+        spark.createDataFrame([(9, i * 1_000, 1.0) for i in range(100)], schema),
+        path, ts_col="ts", chunk_us=50_000,
+    )
+    table = Table(spark, "no_jobs", schema, capacity=1_024)
+    for i in range(300):
+        assert table.write_record({"sym": 1, "ts": 100_000 + i * 500, "px": 2.0})
+
+    before = _job_ids(spark)
+    assert table.flush_to_parquet(stage) == 300
+    assert _job_ids(spark) == before, "flush_to_parquet ran a Spark job"
+
+    staged = spark.read.parquet(stage)
+    before = _job_ids(spark)
+    append_time_layout(staged, path)
+    assert _job_ids(spark) == before, "append_time_layout ran a Spark job"
+    assert read_time_range(spark, path).count() == 400
