@@ -1,10 +1,5 @@
 """Engine function library: vector math, text analysis, binary codecs."""
 
-from open_rust_timeseries_db_spark.functions.vectors import (
-    cosine_fx,
-    dot_fx,
-    norm2_fx,
-)
 from open_rust_timeseries_db_spark.functions.text import (
     LANG_MARKERS,
     tokens,
@@ -12,9 +7,6 @@ from open_rust_timeseries_db_spark.functions.text import (
 )
 
 __all__ = [
-    "cosine_fx",
-    "dot_fx",
-    "norm2_fx",
     "LANG_MARKERS",
     "tokens",
     "word_shingles",

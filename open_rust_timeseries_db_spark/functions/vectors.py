@@ -1,4 +1,5 @@
-"""Vector math over ArrayType(Float) columns — JVM-side, no Python UDFs.
+"""Vector kernels over ArrayType(Float) columns, run as Arrow batches
+(mapInPandas / applyInPandas) with numpy inside.
 
 All folds are fixed-point: each elementwise product is floored at scale
 1e12 into a BIGINT and summed exactly. Rationale (learned the hard way,
@@ -10,54 +11,12 @@ sums are order-insensitive.
 
 The multimodal payload ingested by the reference is opaque bytes
 (reference src/storage/table.rs:27); embeddings here are its typed
-evolution: ArrayType(FloatType()) columns with whole-stage-codegen
-arithmetic.
+evolution: ArrayType(FloatType()) columns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 FX_SCALE = 1e12
-
-
-def _fx_sum(products: Column) -> Column:
-    """Sum an array of doubles as floor(x*1e12) BIGINTs (exact)."""
-    return F.aggregate(
-        products,
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + F.floor(x * F.lit(FX_SCALE)),
-    )
-
-
-def dot_fx(a: Column | str, b: Column | str) -> Column:
-    """Fixed-point dot product of two float-array columns -> double."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return (_fx_sum(prods).cast("double")) / F.lit(FX_SCALE)
-
-
-def norm2_fx(a: Column | str) -> Column:
-    """Fixed-point squared L2 norm of a float-array column -> double."""
-    a = F.col(a) if isinstance(a, str) else a
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return (_fx_sum(sq).cast("double")) / F.lit(FX_SCALE)
-
-
-def cosine_fx(a: Column | str, b: Column | str) -> Column:
-    """Deterministic cosine similarity between two float-array columns.
-
-    cos = dot_fx / (sqrt(norm2_fx(a)) * sqrt(norm2_fx(b))). Every input
-    to the division is derived from exact integer sums, so the result is
-    bit-identical across engines computing the same formula.
-
-    Plan note: norm2_fx here is re-evaluated per PAIR. The pair-join
-    queries use the Arrow block kernels below, which take each norm once
-    per vector.
-    """
-    return dot_fx(a, b) / (F.sqrt(norm2_fx(a)) * F.sqrt(norm2_fx(b)))
 
 
 def _driver_rows(df_or_rows, *cols):
@@ -527,5 +486,6 @@ SQL_ELEMS = (
 
 
 def sql_fx_sum(expr: str) -> str:
-    """DuckDB mirror of _fx_sum over a per-row product expression."""
+    """DuckDB sum of floor(expr * 1e12) BIGINTs over a per-row product
+    expression: the fixed-point fold the kernels above compute."""
     return f"CAST(SUM(CAST(FLOOR(({expr}) * 1e12) AS BIGINT)) AS BIGINT)"

@@ -225,27 +225,30 @@ def _conversion_proj_rows(spark: SparkSession, sf_dir: str) -> int:
 def _events_layout_rows(spark: SparkSession, sf_dir: str) -> int:
     from open_rust_timeseries_db_spark.sources.layout import (
         events_layout_ckpt,
+        read_time_range,
     )
 
-    return spark.read.parquet(events_layout_ckpt(spark, sf_dir)).count()
+    return read_time_range(spark, events_layout_ckpt(spark, sf_dir)).count()
 
 
 def _events_append_layout_rows(spark: SparkSession, sf_dir: str) -> int:
     from open_rust_timeseries_db_spark.sources.layout import (
         events_append_layout_ckpt,
+        read_time_range,
     )
 
-    return spark.read.parquet(
-        events_append_layout_ckpt(spark, sf_dir)
+    return read_time_range(
+        spark, events_append_layout_ckpt(spark, sf_dir)
     ).count()
 
 
 def _events_zorder_rows(spark: SparkSession, sf_dir: str) -> int:
     from open_rust_timeseries_db_spark.sources.layout import (
         events_zorder_ckpt,
+        read_time_range,
     )
 
-    return spark.read.parquet(events_zorder_ckpt(spark, sf_dir)).count()
+    return read_time_range(spark, events_zorder_ckpt(spark, sf_dir)).count()
 
 
 def _ohlc_hourly_rows(spark: SparkSession, sf_dir: str) -> int:

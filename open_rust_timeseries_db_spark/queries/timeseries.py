@@ -1507,10 +1507,10 @@ _MONTH_LO_US = 1_704_067_200_000_000
 def q_chunk_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from open_rust_timeseries_db_spark.sources.layout import (
         events_layout_ckpt,
+        read_layout,
     )
 
-    path = events_layout_ckpt(spark, sf_dir)
-    chunked = spark.read.parquet(path)
+    chunked = read_layout(spark, events_layout_ckpt(spark, sf_dir))
     dim = (
         spark.range(31)
         .select(

@@ -11,10 +11,12 @@ what makes its query half viable. Three facts drive this module:
    the hypertable-chunk pattern re-expressed as vanilla Spark
    partitioned parquet (no table format required).
 
-2. **Chunk layout is metadata, not convention.** The chunk width and
-   timestamp column are recorded in a sidecar manifest at write time;
-   readers derive the pruning predicate from the manifest instead of
-   callers re-supplying (and mis-supplying) them.
+2. **Chunk layout is metadata, not convention.** The chunk width,
+   timestamp column and data schema are recorded in a sidecar manifest
+   at write time; readers derive the pruning predicate from the manifest
+   instead of callers re-supplying (and mis-supplying) them, and scan
+   with the declared schema instead of running Spark's schema-inference
+   job on every read. Appends must match that schema.
 
 3. **Streaming ingest produces small files forever.** Each micro-batch
    commit (streaming/run.foreach_batch_parquet) lands one file per
@@ -43,6 +45,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from open_rust_timeseries_db_spark import session_cache
 
@@ -52,11 +55,27 @@ _CHUNK_COL = "chunk_us"
 DAY_US = 86_400_000_000
 HOUR_US = 3_600_000_000
 
-# A plain parquet file scan below this many bytes appends on the driver
-# (pyarrow sort + write, no Spark job). Decoded and sorted, 64 MB of
-# snappy parquet stays a few hundred MB of driver memory, well inside a
-# 2 GB driver; larger inputs keep the Spark job.
-_LOCAL_APPEND_MAX_BYTES = 64 << 20
+# A plain parquet file scan appended, or a time-layout chunk compacted,
+# below this many bytes is rewritten on the driver (pyarrow sort + write,
+# no Spark job). Decoded and sorted, 64 MB of snappy parquet stays a few
+# hundred MB of driver memory, well inside a 2 GB driver; larger inputs
+# keep the Spark job.
+_DRIVER_MAX_BYTES = 64 << 20
+
+
+def _nullable_schema(df: DataFrame) -> T.StructType:
+    """``df``'s schema as Spark reads it back from parquet files: every
+    field nullable, recursively (the JVM's ``StructType.asNullable``)."""
+    return T.StructType.fromJson(
+        json.loads(df._jdf.schema().asNullable().json())
+    )
+
+
+def _write_manifest(path: str, manifest: dict, df: DataFrame) -> None:
+    """Write the sidecar manifest, declaring ``df``'s data schema."""
+    manifest["schema"] = _nullable_schema(df).jsonValue()
+    with open(os.path.join(path, _MANIFEST), "w") as f:
+        json.dump(manifest, f)
 
 
 def write_time_layout(
@@ -94,8 +113,7 @@ def write_time_layout(
         .parquet(path)
     )
     manifest = {"ts_col": ts_col, "chunk_us": chunk_us, "version": 1}
-    with open(os.path.join(path, _MANIFEST), "w") as f:
-        json.dump(manifest, f)
+    _write_manifest(path, manifest, df)
 
 
 def _events_copy(
@@ -247,8 +265,7 @@ def write_zorder_layout(
         },
         "version": 2,
     }
-    with open(os.path.join(path, _MANIFEST), "w") as f:
-        json.dump(manifest, f)
+    _write_manifest(path, manifest, df)
 
 
 def events_zorder_ckpt(
@@ -289,32 +306,31 @@ def read_manifest(path: str) -> dict:
         return json.load(f)
 
 
-def _driver_rows(df: DataFrame, man: dict):
-    """The rows of ``df`` as one Arrow table, or None when the append
-    must run as a Spark job.
+def _declared_schema(man: dict) -> T.StructType | None:
+    """The data schema the manifest declares (no chunk column), or None
+    for a manifest written before layouts recorded it."""
+    return T.StructType.fromJson(man["schema"]) if "schema" in man else None
 
-    Driver-side only for a plain scan of local parquet files (the
-    optimized plan is a single leaf) totalling under
-    ``_LOCAL_APPEND_MAX_BYTES``, appended into a time layout (no
-    ``order`` in the manifest) whose integer ts column holds no nulls,
-    and only when the files decode to the Arrow types Spark's schema
-    maps to, so the rewrite is exact.
-    """
-    if man.get("order") or df._jdf.queryExecution().optimizedPlan().children().size():
-        return None
-    urls = [urlparse(f) for f in df.inputFiles()]
-    if not urls or any(
-        u.scheme != "file" or not u.path.endswith(".parquet") for u in urls
-    ):
-        return None
-    paths = [unquote(u.path) for u in urls]
-    if sum(os.path.getsize(p) for p in paths) >= _LOCAL_APPEND_MAX_BYTES:
-        return None
+
+def _data_files(directory: str):
+    """The data files of one chunk directory, as ``os.DirEntry``s: the
+    ``.parquet`` files Spark lists (no ``.``/``_``-prefixed names)."""
+    with os.scandir(directory) as it:
+        for e in it:
+            if e.name.endswith(".parquet") and not e.name.startswith((".", "_")):
+                yield e
+
+
+def _arrow_rows(paths: list[str], schema: T.StructType, ts_col: str):
+    """The rows of the parquet files at ``paths`` as one Arrow table with
+    the Arrow types ``schema`` maps to, or None when a driver-side
+    rewrite would not be exact: a file lacks a column or decodes to
+    other types, or ``ts_col`` is not a null-free integer column."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    want = to_arrow_schema(df.schema)
+    want = to_arrow_schema(schema)
     parts = []
     for p in paths:
         part = pq.read_table(p)
@@ -325,10 +341,42 @@ def _driver_rows(df: DataFrame, man: dict):
             return None
         parts.append(part.cast(want))
     rows = pa.concat_tables(parts)
-    ts = rows.column(man["ts_col"])
+    ts = rows.column(ts_col)
     if not pa.types.is_integer(ts.type) or ts.null_count:
         return None
     return rows
+
+
+def _driver_rows(df: DataFrame, man: dict):
+    """The rows of ``df`` as one Arrow table, or None when the append
+    must run as a Spark job.
+
+    Driver-side only for a plain scan of local parquet files (the
+    optimized plan is a single leaf) totalling under
+    ``_DRIVER_MAX_BYTES``, appended into a time layout (no ``order`` in
+    the manifest), when :func:`_arrow_rows` can decode them exactly.
+    """
+    if man.get("order") or df._jdf.queryExecution().optimizedPlan().children().size():
+        return None
+    urls = [urlparse(f) for f in df.inputFiles()]
+    if not urls or any(
+        u.scheme != "file" or not u.path.endswith(".parquet") for u in urls
+    ):
+        return None
+    paths = [unquote(u.path) for u in urls]
+    if sum(os.path.getsize(p) for p in paths) >= _DRIVER_MAX_BYTES:
+        return None
+    return _arrow_rows(paths, df.schema, man["ts_col"])
+
+
+def _sorted_by_ts(rows, ts_col: str):
+    """``rows`` stably sorted by the integer ``ts_col``, and the sorted
+    timestamps as int64."""
+    import numpy as np
+
+    ts = rows.column(ts_col).to_numpy().astype(np.int64, copy=False)
+    order = np.argsort(ts, kind="stable")
+    return rows.take(order), ts[order]
 
 
 def _write_chunk_files(rows, man: dict, schema, directory: str) -> None:
@@ -341,13 +389,10 @@ def _write_chunk_files(rows, man: dict, schema, directory: str) -> None:
     from open_rust_timeseries_db_spark.sources.io import write_arrow_parquet
 
     os.makedirs(directory, exist_ok=True)
-    ts = rows.column(man["ts_col"]).to_numpy().astype(np.int64, copy=False)
-    order = np.argsort(ts, kind="stable")
-    ts = ts[order]
+    rows, ts = _sorted_by_ts(rows, man["ts_col"])
     # np.mod is a floor modulo: the same chunk as Spark's pmod. The chunk
     # is nondecreasing in ts, so the ts order is the (chunk, ts) order.
     chunk = ts - np.mod(ts, man["chunk_us"])
-    rows = rows.take(order)
     cuts = [0, *(np.flatnonzero(np.diff(chunk)) + 1).tolist(), len(ts)]
     for lo, hi in zip(cuts, cuts[1:]):
         write_arrow_parquet(
@@ -433,7 +478,7 @@ def append_time_layout(
 
     **Driver path.** A small plain file scan — ``df`` is
     ``spark.read.parquet(...)`` of local parquet files under
-    ``_LOCAL_APPEND_MAX_BYTES`` in total, appended into a time layout
+    ``_DRIVER_MAX_BYTES`` in total, appended into a time layout
     (not Z-order) with no null timestamps — is read, sorted and written
     with pyarrow on the driver, one ts-sorted file per chunk, each
     committed by rename: no Spark job. Only the "write partitioned files
@@ -441,8 +486,21 @@ def append_time_layout(
     below are the same for both paths. Every other input (filtered or
     derived frames, Z-order layouts, null timestamps, large inputs) runs
     as a Spark job.
+
+    Raises ``ValueError`` when ``df``'s column names or types differ from
+    the schema the manifest declares (nullability aside): readers scan
+    with that schema, so a mismatched file would read wrong or fail.
     """
     man = read_manifest(path)
+    declared = _declared_schema(man)
+    if declared is not None:
+        want = {f.name: f.dataType for f in declared}
+        got = {f.name: f.dataType for f in _nullable_schema(df)}
+        if got != want:
+            raise ValueError(
+                f"append_time_layout: frame schema {df.schema.simpleString()}"
+                f" differs from the layout's {declared.simpleString()}"
+            )
     rows = _driver_rows(df, man)
     if rows is not None:
         write = functools.partial(_write_chunk_files, rows, man, df.schema)
@@ -465,9 +523,7 @@ def append_time_layout(
         for entry in os.listdir(scratch):
             if entry.startswith(f"{_CHUNK_COL}="):
                 staged[entry] = sorted(
-                    f
-                    for f in os.listdir(os.path.join(scratch, entry))
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
+                    f.name for f in _data_files(os.path.join(scratch, entry))
                 )
         # Per chunk: delete THAT chunk's prior prefix files, then move
         # the staged replacements in. The unprotected window is one
@@ -530,6 +586,45 @@ def stream_into_time_layout(
     )
 
 
+def read_layout(spark: SparkSession, path: str) -> DataFrame:
+    """The whole layout at ``path`` as a Spark scan, ``chunk_us``
+    partition column included, read with the manifest's declared schema
+    so no schema-inference job runs."""
+    schema = _declared_schema(read_manifest(path))
+    if schema is None:
+        return spark.read.parquet(path)
+    chunk = T.StructField(_CHUNK_COL, T.LongType())
+    return spark.read.schema(T.StructType([*schema.fields, chunk])).parquet(path)
+
+
+def _scan_is_small(
+    spark: SparkSession, path: str, lo_chunk: int | None, hi_chunk: int | None
+) -> bool:
+    """Whether the data files of the chunks in [lo_chunk, hi_chunk]
+    total at most ``spark.sql.files.openCostInBytes``: Spark's own cost
+    of opening one file. Stops listing once the total passes it."""
+    budget = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    total = 0
+    with os.scandir(path) as it:
+        for entry in it:
+            if not entry.name.startswith(f"{_CHUNK_COL}="):
+                continue
+            try:
+                chunk = int(entry.name.split("=", 1)[1])
+            except ValueError:  # the null-ts chunk: counted, never pruned
+                chunk = None
+            if chunk is not None and (
+                (lo_chunk is not None and chunk < lo_chunk)
+                or (hi_chunk is not None and chunk > hi_chunk)
+            ):
+                continue
+            for f in _data_files(entry.path):
+                total += f.stat().st_size
+                if total > budget:
+                    return False
+    return True
+
+
 def read_time_range(
     spark: SparkSession,
     path: str,
@@ -550,22 +645,35 @@ def read_time_range(
       (PushedFilters), skipping row groups via min/max, which the
       sorted write above made tight.
 
+    The scan uses the manifest's declared schema (:func:`read_layout`),
+    so it runs no schema-inference job, and a layout whose chunks were
+    all dropped reads as zero rows with the layout's columns. When the
+    data files of the chunks the window keeps total at most
+    ``spark.sql.files.openCostInBytes`` — by Spark's cost model, about
+    the cost of opening one file — the scan is coalesced to one
+    partition: an aggregate, window or join above it then plans no
+    Exchange, and the whole query is one job with one task, where a
+    shuffle across cores could not pay for itself.
+
     Returns the full row set of the interval with the chunk column
     dropped (layout detail, not data).
     """
     man = read_manifest(path)
     ts_col, chunk_us = man["ts_col"], man["chunk_us"]
-    df = spark.read.parquet(path)
+    df = read_layout(spark, path)
+    lo_chunk = hi_chunk = None
     if lo_us is not None:
+        lo_chunk = (lo_us // chunk_us) * chunk_us
         df = df.filter(
-            (F.col(_CHUNK_COL) >= (lo_us // chunk_us) * chunk_us)
-            & (F.col(ts_col) >= lo_us)
+            (F.col(_CHUNK_COL) >= lo_chunk) & (F.col(ts_col) >= lo_us)
         )
     if hi_us is not None:
+        hi_chunk = ((hi_us - 1) // chunk_us) * chunk_us
         df = df.filter(
-            (F.col(_CHUNK_COL) <= ((hi_us - 1) // chunk_us) * chunk_us)
-            & (F.col(ts_col) < hi_us)
+            (F.col(_CHUNK_COL) <= hi_chunk) & (F.col(ts_col) < hi_us)
         )
+    if _scan_is_small(spark, path, lo_chunk, hi_chunk):
+        df = df.coalesce(1)
     return df.drop(_CHUNK_COL)
 
 
@@ -580,15 +688,10 @@ def chunk_file_stats(path: str) -> dict[str, dict]:
     for entry in sorted(os.listdir(path)):
         if not entry.startswith(f"{_CHUNK_COL}="):
             continue
-        full = os.path.join(path, entry)
-        files = [
-            os.path.join(full, f)
-            for f in os.listdir(full)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
+        files = list(_data_files(os.path.join(path, entry)))
         stats[entry] = {
             "n_files": len(files),
-            "bytes": sum(os.path.getsize(f) for f in files),
+            "bytes": sum(f.stat().st_size for f in files),
         }
     return stats
 
@@ -639,7 +742,18 @@ def compact_chunks(
     deployment fans the loop out as one job per chunk.
 
     Returns {chunk_dir: (files_before, files_after)} for the chunks
-    rewritten.
+    rewritten, counting data files as :func:`chunk_file_stats` does.
+
+    **Driver path.** A chunk of a time layout (no ``order`` in the
+    manifest) under ``_DRIVER_MAX_BYTES`` whose files all decode to the
+    Arrow types of the manifest's declared schema, with no null
+    timestamps, is rewritten on the driver: its files are concatenated
+    with pyarrow, stably sorted by ts and written as ``ceil(bytes /
+    target)`` contiguous slices (``sources/io.write_arrow_parquet``,
+    Spark's schema in each footer), with no Spark job. Only the rewrite
+    step differs; the scratch directory and two-rename swap are the
+    same. Z-order layouts, large chunks and files of other types run
+    the Spark job below.
 
     Chunks are independent, so their rewrite jobs run CONCURRENTLY from
     a small driver thread pool (guide-standard overlap of independent
@@ -652,45 +766,64 @@ def compact_chunks(
     the "one job per chunk, fanned out" deployment the serial loop was
     documented as standing in for.
     """
+    from open_rust_timeseries_db_spark.sources.io import write_arrow_parquet
+
     man = read_manifest(path)
     ts_col = man["ts_col"]
     order = man.get("order")
+    schema = _declared_schema(man)
 
     def compact_one(entry: str, st: dict) -> tuple[str, tuple[int, int]]:
         full = os.path.join(path, entry)
         n_out = max(1, math.ceil(st["bytes"] / target_file_bytes))
         scratch = os.path.join(path, f".compact-{uuid.uuid4().hex[:8]}")
-        chunk_df = spark.read.parquet(full)
-        if order and order.get("type") == "zorder":
-            # Restore the manifest's Morton clustering, not plain ts
-            # order — compaction must preserve the layout's 2-D
-            # pruning contract, reusing the recorded grid.
-            zk = zorder_key(
-                [F.col(c) for c in order["cols"]],
-                [tuple(b) for b in order["bounds"]],
-                order["bits"],
-            )
-            sorted_df = (
-                chunk_df.withColumn("__z", zk)
-                .repartitionByRange(n_out, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
+        rows = None
+        if not order and schema is not None and st["bytes"] < _DRIVER_MAX_BYTES:
+            files = [f.path for f in _data_files(full)]
+            rows = _arrow_rows(files, schema, ts_col)
+        if rows is not None:
+            # Contiguous slices of the ts-sorted rows: the files the
+            # Spark path's range split writes, with no Spark job.
+            rows, _ = _sorted_by_ts(rows, ts_col)
+            # No empty slices; a chunk of empty files still gets one file.
+            n = min(n_out, rows.num_rows) or 1
+            cuts = [rows.num_rows * i // n for i in range(n + 1)]
+            for lo, hi in zip(cuts, cuts[1:]):
+                write_arrow_parquet(rows.slice(lo, hi - lo), scratch, schema)
         else:
-            sorted_df = chunk_df.repartitionByRange(
-                n_out, ts_col
-            ).sortWithinPartitions(ts_col)
-        sorted_df.write.mode("overwrite").parquet(scratch)
-        # Drop the batch writer's _SUCCESS marker so the swapped-in
-        # directory holds only data files like the original chunk.
-        marker = os.path.join(scratch, "_SUCCESS")
-        if os.path.exists(marker):
-            os.remove(marker)
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            chunk_df = reader.parquet(full)
+            if order and order.get("type") == "zorder":
+                # Restore the manifest's Morton clustering, not plain ts
+                # order — compaction must preserve the layout's 2-D
+                # pruning contract, reusing the recorded grid.
+                zk = zorder_key(
+                    [F.col(c) for c in order["cols"]],
+                    [tuple(b) for b in order["bounds"]],
+                    order["bits"],
+                )
+                sorted_df = (
+                    chunk_df.withColumn("__z", zk)
+                    .repartitionByRange(n_out, "__z")
+                    .sortWithinPartitions("__z")
+                    .drop("__z")
+                )
+            else:
+                sorted_df = chunk_df.repartitionByRange(
+                    n_out, ts_col
+                ).sortWithinPartitions(ts_col)
+            sorted_df.write.mode("overwrite").parquet(scratch)
+            # Drop the batch writer's _SUCCESS marker (and its checksum)
+            # so the swapped-in directory holds only data files like the
+            # original chunk.
+            for marker in ("_SUCCESS", "._SUCCESS.crc"):
+                if os.path.exists(os.path.join(scratch, marker)):
+                    os.remove(os.path.join(scratch, marker))
         trash = os.path.join(path, f".trash-{uuid.uuid4().hex[:8]}")
         os.rename(full, trash)
         os.rename(scratch, full)
         shutil.rmtree(trash, ignore_errors=True)
-        return entry, (st["n_files"], len(os.listdir(full)))
+        return entry, (st["n_files"], sum(1 for _ in _data_files(full)))
 
     todo = [
         (entry, st)

@@ -18,11 +18,14 @@ from pyspark.sql import functions as F
 from open_rust_timeseries_db_spark.queries.helpers import events_us
 from open_rust_timeseries_db_spark.sources.layout import (
     DAY_US,
+    append_time_layout,
     chunk_file_stats,
     compact_chunks,
+    drop_chunks_before,
     read_manifest,
     read_time_range,
     write_time_layout,
+    write_zorder_layout,
 )
 
 from .conftest import SF_DIR
@@ -752,7 +755,7 @@ class TestDriverAppend:
         else:
             layout.write_time_layout(seed, path, ts_col="ts_us")
         if case == "over_bytes":
-            monkeypatch.setattr(layout, "_LOCAL_APPEND_MAX_BYTES", 1)
+            monkeypatch.setattr(layout, "_DRIVER_MAX_BYTES", 1)
         calls = _spy_driver_appends(monkeypatch)
         layout.append_time_layout(spark.read.parquet(stage), path)
         assert calls == []
@@ -803,3 +806,187 @@ def test_flush_and_small_append_run_no_spark_job(spark, tmp_path):
     append_time_layout(staged, path)
     assert _job_ids(spark) == before, "append_time_layout ran a Spark job"
     assert read_time_range(spark, path).count() == 400
+
+
+COLS = ["event_id", "user_id", "ts_us", "value"]
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.select(*COLS).collect()))
+
+
+@pytest.mark.parametrize("kind", ["time", "zorder", "arrow_appended"])
+def test_read_uses_the_declared_schema(spark, tmp_path, kind):
+    """read_time_range reads with the schema the manifest declares: no
+    inference job runs, and the frame is the one Spark's own inference
+    reads, for every way a layout's files are written."""
+    ev = events_us(spark, SF_DIR).select(*COLS)
+    path = str(tmp_path / "layout")
+    if kind == "time":
+        write_time_layout(ev, path, ts_col="ts_us")
+    elif kind == "zorder":
+        write_zorder_layout(ev, path, ts_col="ts_us", key_col="user_id")
+    else:  # the odd events appended through the Arrow driver path
+        stage = str(tmp_path / "stage")
+        write_time_layout(
+            ev.filter(F.col("event_id") % 2 == 0), path, ts_col="ts_us"
+        )
+        ev.filter(F.col("event_id") % 2 == 1).write.parquet(stage)
+        append_time_layout(spark.read.parquet(stage), path)
+    man = read_manifest(path)
+    assert "chunk_us" not in [f["name"] for f in man["schema"]["fields"]]
+    assert all(f["nullable"] for f in man["schema"]["fields"])
+
+    before = _job_ids(spark)
+    got = read_time_range(spark, path)
+    assert _job_ids(spark) == before, "read_time_range ran an inference job"
+    inferred = spark.read.parquet(path).drop("chunk_us")
+    assert got.schema == inferred.schema
+    assert _rows(got) == _rows(inferred) == _rows(ev)
+
+
+def test_small_read_is_one_job_without_exchange(spark, layout_path):
+    """A read of a layout under spark.sql.files.openCostInBytes is one
+    partition, so an aggregate above it plans no Exchange and the query
+    is one Spark job; past the gate the shuffle comes back."""
+
+    def query():
+        return (
+            read_time_range(spark, layout_path)
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)), F.sum("event_id"))
+        )
+
+    df = query()
+    before = _job_ids(spark)
+    rows = df.collect()
+    assert len(_job_ids(spark) - before) == 1
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        wide = query()
+        plan = wide._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" in plan
+        assert sorted(map(tuple, wide.collect())) == sorted(map(tuple, rows))
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_emptied_layout_reads_empty(spark, tmp_path):
+    """After retention drops every chunk, the layout reads as zero rows
+    with its columns (Spark's inference has no file to infer from)."""
+    ev = events_us(spark, SF_DIR).select(*COLS)
+    path = str(tmp_path / "emptied")
+    write_time_layout(ev, path, ts_col="ts_us")
+    assert drop_chunks_before(path, 1 << 62)
+    df = read_time_range(spark, path)
+    assert df.count() == 0
+    assert df.columns == COLS
+
+
+@pytest.mark.parametrize("change", ["renamed", "retyped"])
+def test_append_rejects_a_frame_of_another_schema(spark, tmp_path, change):
+    ev = events_us(spark, SF_DIR).select(*COLS)
+    path = str(tmp_path / "layout")
+    write_time_layout(ev, path, ts_col="ts_us")
+    if change == "renamed":
+        bad = ev.withColumnRenamed("value", "price")
+    else:
+        bad = ev.withColumn("user_id", F.col("user_id").cast("int"))
+    with pytest.raises(ValueError, match="schema"):
+        append_time_layout(bad, path)
+    assert read_time_range(spark, path).count() == ev.count()
+
+
+class TestDriverCompaction:
+    """A small time-layout chunk compacts on the driver through pyarrow,
+    with no Spark job, into the files the Spark path writes."""
+
+    def _fragmented(self, spark, path: str, zorder: bool = False) -> None:
+        # The write plus a Spark-path append of a filtered frame leaves
+        # every chunk with several files.
+        ev = events_us(spark, SF_DIR).select(*COLS)
+        seed = ev.filter(F.col("event_id") % 2 == 0)
+        if zorder:
+            write_zorder_layout(seed, path, ts_col="ts_us", key_col="user_id")
+        else:
+            write_time_layout(seed, path, ts_col="ts_us")
+        append_time_layout(ev.filter(F.col("event_id") % 2 == 1), path)
+        assert any(st["n_files"] > 1 for st in chunk_file_stats(path).values())
+
+    def test_small_chunks_compact_with_no_spark_job(
+        self, spark, tmp_path, monkeypatch
+    ):
+        import json
+
+        import pyarrow.parquet as pq
+
+        from open_rust_timeseries_db_spark.sources import layout
+
+        driver, by_spark = str(tmp_path / "driver"), str(tmp_path / "spark")
+        for p in (driver, by_spark):
+            self._fragmented(spark, p)
+        want = _rows(read_time_range(spark, driver))
+
+        before = _job_ids(spark)
+        done = compact_chunks(spark, driver, target_file_bytes=8 << 20)
+        assert done
+        assert _job_ids(spark) == before, "compaction ran a Spark job"
+
+        monkeypatch.setattr(layout, "_DRIVER_MAX_BYTES", 1)
+        before = _job_ids(spark)
+        slow = compact_chunks(spark, by_spark, target_file_bytes=8 << 20)
+        assert set(slow) == set(done)
+        assert _job_ids(spark) - before, "over-gate chunks ran no Spark job"
+
+        assert _rows(read_time_range(spark, driver)) == want
+        assert _rows(read_time_range(spark, by_spark)) == want
+
+        def chunk_file(root: str, chunk: str) -> str:
+            (f,) = [
+                f for f in _layout_files(root) if f.startswith(chunk + "/")
+            ]
+            return os.path.join(root, f)
+
+        def footer_schema(f: str):
+            meta = pq.read_schema(f).metadata
+            key = b"org.apache.spark.sql.parquet.row.metadata"
+            return json.loads(meta[key])
+
+        for chunk in done:
+            d_file = chunk_file(driver, chunk)
+            s_file = chunk_file(by_spark, chunk)
+            assert footer_schema(d_file) == footer_schema(s_file)
+            ts = pq.read_table(d_file).column("ts_us").to_pylist()
+            assert ts == sorted(ts), f"{d_file} is not ts-sorted"
+
+    def test_zorder_chunks_keep_the_spark_path(self, spark, tmp_path):
+        path = str(tmp_path / "z")
+        self._fragmented(spark, path, zorder=True)
+        want = _rows(read_time_range(spark, path))
+        before = _job_ids(spark)
+        assert compact_chunks(spark, path, target_file_bytes=8 << 20)
+        assert _job_ids(spark) - before, "Z-order compaction ran no Spark job"
+        assert _rows(read_time_range(spark, path)) == want
+
+    @pytest.mark.parametrize("path_taken", ["driver", "spark"])
+    def test_files_after_counts_data_files(
+        self, spark, tmp_path, monkeypatch, path_taken
+    ):
+        from open_rust_timeseries_db_spark.sources import layout
+
+        path = str(tmp_path / "layout")
+        self._fragmented(spark, path)
+        if path_taken == "spark":
+            monkeypatch.setattr(layout, "_DRIVER_MAX_BYTES", 1)
+        done = compact_chunks(spark, path, target_file_bytes=8 << 20)
+        assert done
+        stats = chunk_file_stats(path)
+        assert {c: after for c, (_, after) in done.items()} == {
+            c: stats[c]["n_files"] for c in done
+        }
+        for chunk in done:
+            assert "._SUCCESS.crc" not in os.listdir(os.path.join(path, chunk))
