@@ -35,14 +35,6 @@ DEC = "decimal(38,6)"
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Kill switch for the prepared-plan memo (see ``query``): harnesses
-# that monkeypatch physical-strategy gates between invocations
-# (scripts/scale_bench.py forcing BROADCAST_MAX_BYTES=0) must disable
-# it, or the memo would serve the pre-patch plan and silently measure
-# the wrong path.
-PLAN_MEMO_ENABLED = True
-
-
 @dataclass
 class QuerySpec:
     name: str
@@ -121,7 +113,10 @@ def query(
     must not be memoized, or a repeat invocation would return a stale
     result without re-running the work: queries tagged "streaming" (the
     drain is the query) or "iterative" (driver-side loops such as
-    connected components) are never wrapped.
+    connected components) are never wrapped. A harness that flips a
+    physical-strategy gate between builds calls the unmemoized builder,
+    ``spec.fn.__wrapped__``, so it never runs a plan built before the
+    flip.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -157,7 +152,7 @@ def query(
                 # plan cache: the memo key is (app, sf_dir) only, and a
                 # kwarg-built plan must never be served to, or read
                 # from, the default-call cache.
-                if kwargs or not PLAN_MEMO_ENABLED:
+                if kwargs:
                     return confed(spark, sf_dir, **kwargs)
                 # A hit skips the build, but the conf scope must still
                 # roll over to THIS query's declared state.

@@ -9,7 +9,8 @@ src/tests/integration_test.rs:169-173).
 
 ``tune_session`` is idempotent and safe to call on an externally-created
 session (the verification driver builds its own); it only sets runtime
-SQL confs.
+SQL confs. Static SQL confs (``STATIC_CONFS``) apply only to a session
+``get_spark`` creates: an external session keeps its own.
 """
 
 from __future__ import annotations
@@ -64,6 +65,9 @@ def _default_local_dir() -> str:
     return "/tmp"
 
 # Runtime-settable SQL confs applied to any session we touch.
+# ``tune_session`` sets them with ``spark.conf.set``, so none may be a
+# static conf (tests/test_session.py checks each against Spark's own
+# ``SQLConf.isStaticConfigKey``).
 RUNTIME_CONFS: dict[str, str] = {
     # testdata events.ts is parquet TIMESTAMP(NANOS); Spark would refuse
     # the scan otherwise. Read as epoch-nanos LongType (lossless).
@@ -83,6 +87,14 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     # All Python execution in this engine is Arrow-vectorized.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Deterministic wall-time semantics for tests/oracles.
+    "spark.sql.session.timeZone": "UTC",
+}
+
+# Static SQL confs: fixed when the session is created, so only
+# ``get_spark``'s builder can apply them. An external session keeps its
+# own values for these; ``tune_session`` cannot change them.
+STATIC_CONFS: dict[str, str] = {
     # Whole-stage-codegen class cache. The default (100 entries) LRU
     # THRASHES under a many-query workload: one analytics pass here
     # compiles several hundred distinct codegen units (AQE re-plans
@@ -93,19 +105,14 @@ RUNTIME_CONFS: dict[str, str] = {
     # is comfortably within driver memory and right for a long-lived
     # multi-tenant session at any scale.
     "spark.sql.codegen.cache.maxEntries": "10000",
-    # Deterministic wall-time semantics for tests/oracles.
-    "spark.sql.session.timeZone": "UTC",
 }
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply this engine's runtime confs to an existing session."""
+    """Apply this engine's runtime confs to an existing session. A conf
+    Spark refuses raises; the static confs are ``get_spark``'s alone."""
     for key, value in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # A conf may be static on some builds; never fail the caller.
-            pass
+        spark.conf.set(key, value)
     return spark
 
 
@@ -172,6 +179,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
         )
     )
-    for key, value in RUNTIME_CONFS.items():
+    for key, value in STATIC_CONFS.items():
         builder = builder.config(key, value)
     return tune_session(builder.getOrCreate())

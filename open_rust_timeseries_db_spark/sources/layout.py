@@ -22,9 +22,14 @@ what makes its query half viable. Three facts drive this module:
    commit (streaming/run.foreach_batch_parquet) lands one file per
    state partition per trigger; a month of that is millions of tiny
    files and a scheduler-bound scan. Compaction is therefore a
-   first-class maintenance operator, not an afterthought: rewrite each
-   chunk's files into ~target-size, timestamp-sorted files, atomically
-   per chunk, so readers never see a half-compacted chunk.
+   first-class maintenance operator, not an afterthought: it appends
+   each chunk's rows into a scratch directory through the same writer
+   as an append, ~target-size and sorted, and swaps the result in
+   atomically per chunk, so readers never see a half-compacted chunk.
+   Every write has one Spark path (:func:`_chunked_writer`, the only
+   place the chunk column and the sort order are built) and, for small
+   time-layout inputs that :func:`_driver_rows` admits, one driver path
+   (:func:`_write_chunk_files`, pyarrow, no Spark job).
 
 At cluster scale the same code runs with two changes the docstrings
 note inline: the atomic directory swap becomes the table format's
@@ -43,7 +48,7 @@ import tempfile
 import uuid
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,11 +60,11 @@ _CHUNK_COL = "chunk_us"
 DAY_US = 86_400_000_000
 HOUR_US = 3_600_000_000
 
-# A plain parquet file scan appended, or a time-layout chunk compacted,
-# below this many bytes is rewritten on the driver (pyarrow sort + write,
-# no Spark job). Decoded and sorted, 64 MB of snappy parquet stays a few
-# hundred MB of driver memory, well inside a 2 GB driver; larger inputs
-# keep the Spark job.
+# A set of parquet files (an appended plain file scan, or a compacted
+# time-layout chunk) below this many bytes is rewritten on the driver
+# (pyarrow sort + write, no Spark job). Decoded and sorted, 64 MB of
+# snappy parquet stays a few hundred MB of driver memory, well inside a
+# 2 GB driver; larger inputs keep the Spark job.
 _DRIVER_MAX_BYTES = 64 << 20
 
 
@@ -76,6 +81,36 @@ def _write_manifest(path: str, manifest: dict, df: DataFrame) -> None:
     manifest["schema"] = _nullable_schema(df).jsonValue()
     with open(os.path.join(path, _MANIFEST), "w") as f:
         json.dump(manifest, f)
+
+
+def _chunked_writer(
+    df: DataFrame, man: dict, n_range_partitions: int | None
+) -> DataFrameWriter:
+    """The Spark writer of ``df`` laid out as the manifest ``man`` says;
+    the caller picks the mode and the directory.
+
+    Adds the ``chunk_us`` column (the timestamp floored to the chunk
+    width), range-partitions into ``n_range_partitions`` (default: the
+    session's shuffle partitioning) and sorts within each partition by
+    (chunk, ts) — or, for a Z-ordered layout, by (chunk, Morton key) on
+    the manifest's recorded grid — then partitions the output by chunk.
+    """
+    ts_col, order = man["ts_col"], man.get("order")
+    chunk = F.col(ts_col) - F.pmod(F.col(ts_col), F.lit(man["chunk_us"]))
+    out = df.withColumn(_CHUNK_COL, chunk.cast("long"))
+    keys = [_CHUNK_COL, ts_col]
+    if order:
+        cols = [F.col(c) for c in order["cols"]]
+        bounds = [tuple(b) for b in order["bounds"]]
+        out = out.withColumn("__z", zorder_key(cols, bounds, order["bits"]))
+        keys = [_CHUNK_COL, "__z"]
+    n = n_range_partitions or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    out = out.repartitionByRange(n, *keys).sortWithinPartitions(*keys)
+    if order:
+        out = out.drop("__z")
+    return out.write.partitionBy(_CHUNK_COL)
 
 
 def write_time_layout(
@@ -100,19 +135,9 @@ def write_time_layout(
     exactly like shuffle partitions, and the range exchange samples
     keys, so skewed days spread across many partitions instead of one.
     """
-    chunk = (F.col(ts_col) - F.pmod(F.col(ts_col), F.lit(chunk_us))).cast("long")
-    out = df.withColumn(_CHUNK_COL, chunk)
-    n = n_range_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    (
-        out.repartitionByRange(n, _CHUNK_COL, ts_col)
-        .sortWithinPartitions(_CHUNK_COL, ts_col)
-        .write.mode("overwrite")
-        .partitionBy(_CHUNK_COL)
-        .parquet(path)
-    )
     manifest = {"ts_col": ts_col, "chunk_us": chunk_us, "version": 1}
+    writer = _chunked_writer(df, manifest, n_range_partitions)
+    writer.mode("overwrite").parquet(path)
     _write_manifest(path, manifest, df)
 
 
@@ -171,8 +196,6 @@ def zorder_key(
     expressions. 2 dims x 16 bits = a 32-bit key; whole-stage codegen
     folds the ~64 shift/mask terms into straight-line JVM code.
     """
-    from pyspark.sql import functions as F
-
     quantized = []
     top = (1 << bits) - 1
     for c, (lo, hi) in zip(cols, bounds):
@@ -223,8 +246,6 @@ def write_zorder_layout(
     recorded in the manifest so appends/compaction can reuse the same
     quantization grid.
     """
-    from pyspark.sql import functions as F
-
     lo_ts, hi_ts, lo_k, hi_k = df.agg(
         F.min(ts_col), F.max(ts_col), F.min(key_col), F.max(key_col)
     ).first()
@@ -237,23 +258,6 @@ def write_zorder_layout(
             f"write_zorder_layout: input has no non-null {ts_col!r} rows; "
             "refusing to write an empty layout"
         )
-    bounds = [(lo_ts, hi_ts), (lo_k, hi_k)]
-    chunk = (F.col(ts_col) - F.pmod(F.col(ts_col), F.lit(chunk_us))).cast(
-        "long"
-    )
-    z = zorder_key([F.col(ts_col), F.col(key_col)], bounds, bits)
-    out = df.withColumn(_CHUNK_COL, chunk).withColumn("__z", z)
-    n = n_range_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    (
-        out.repartitionByRange(n, _CHUNK_COL, "__z")
-        .sortWithinPartitions(_CHUNK_COL, "__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .partitionBy(_CHUNK_COL)
-        .parquet(path)
-    )
     manifest = {
         "ts_col": ts_col,
         "chunk_us": chunk_us,
@@ -265,6 +269,8 @@ def write_zorder_layout(
         },
         "version": 2,
     }
+    writer = _chunked_writer(df, manifest, n_range_partitions)
+    writer.mode("overwrite").parquet(path)
     _write_manifest(path, manifest, df)
 
 
@@ -312,6 +318,19 @@ def _declared_schema(man: dict) -> T.StructType | None:
     return T.StructType.fromJson(man["schema"]) if "schema" in man else None
 
 
+def _chunk_dirs(path: str):
+    """``(name, chunk)`` for each chunk directory under ``path``, sorted
+    by name. ``chunk`` is the directory's first timestamp, or None for
+    the null-ts chunk (``chunk_us=__HIVE_DEFAULT_PARTITION__``, written
+    by a Spark-path append of rows with a null timestamp), which no time
+    bound prunes or expires."""
+    prefix = f"{_CHUNK_COL}="
+    for entry in sorted(os.listdir(path)):
+        if entry.startswith(prefix):
+            value = entry[len(prefix):]
+            yield entry, int(value) if value.lstrip("-").isdigit() else None
+
+
 def _data_files(directory: str):
     """The data files of one chunk directory, as ``os.DirEntry``s: the
     ``.parquet`` files Spark lists (no ``.``/``_``-prefixed names)."""
@@ -321,121 +340,86 @@ def _data_files(directory: str):
                 yield e
 
 
-def _arrow_rows(paths: list[str], schema: T.StructType, ts_col: str):
+def _scan_files(df: DataFrame) -> list[str] | None:
+    """The local parquet files of ``df`` when it is a plain file scan
+    (its optimized plan is a single leaf), else None."""
+    if df._jdf.queryExecution().optimizedPlan().children().size():
+        return None
+    urls = [urlparse(f) for f in df.inputFiles()]
+    if any(u.scheme != "file" or not u.path.endswith(".parquet") for u in urls):
+        return None
+    return [unquote(u.path) for u in urls]
+
+
+def _driver_rows(paths: list[str] | None, man: dict, schema: T.StructType | None):
     """The rows of the parquet files at ``paths`` as one Arrow table with
-    the Arrow types ``schema`` maps to, or None when a driver-side
-    rewrite would not be exact: a file lacks a column or decodes to
-    other types, or ``ts_col`` is not a null-free integer column."""
+    the Arrow types ``schema`` maps to, or None when a Spark job must
+    rewrite them: the one driver/Spark gate of appends and compaction.
+
+    The driver takes them only into a time layout (no ``order`` in the
+    manifest), when they total under ``_DRIVER_MAX_BYTES`` and decode
+    exactly: every file holds every column of ``schema`` at its types
+    (a partition column lives in directory names instead), and the
+    manifest's ``ts_col`` is a null-free integer column.
+    """
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    if (
+        not paths
+        or man.get("order")
+        or schema is None
+        or sum(os.path.getsize(p) for p in paths) >= _DRIVER_MAX_BYTES
+    ):
+        return None
     want = to_arrow_schema(schema)
     parts = []
     for p in paths:
         part = pq.read_table(p)
         if not set(want.names) <= set(part.column_names):
-            return None  # e.g. partition columns, held in directory names
+            return None
         part = part.select(want.names)
         if part.schema.types != want.types:
             return None
         parts.append(part.cast(want))
     rows = pa.concat_tables(parts)
-    ts = rows.column(ts_col)
+    ts = rows.column(man["ts_col"])
     if not pa.types.is_integer(ts.type) or ts.null_count:
         return None
     return rows
 
 
-def _driver_rows(df: DataFrame, man: dict):
-    """The rows of ``df`` as one Arrow table, or None when the append
-    must run as a Spark job.
-
-    Driver-side only for a plain scan of local parquet files (the
-    optimized plan is a single leaf) totalling under
-    ``_DRIVER_MAX_BYTES``, appended into a time layout (no ``order`` in
-    the manifest), when :func:`_arrow_rows` can decode them exactly.
-    """
-    if man.get("order") or df._jdf.queryExecution().optimizedPlan().children().size():
-        return None
-    urls = [urlparse(f) for f in df.inputFiles()]
-    if not urls or any(
-        u.scheme != "file" or not u.path.endswith(".parquet") for u in urls
-    ):
-        return None
-    paths = [unquote(u.path) for u in urls]
-    if sum(os.path.getsize(p) for p in paths) >= _DRIVER_MAX_BYTES:
-        return None
-    return _arrow_rows(paths, df.schema, man["ts_col"])
-
-
-def _sorted_by_ts(rows, ts_col: str):
-    """``rows`` stably sorted by the integer ``ts_col``, and the sorted
-    timestamps as int64."""
-    import numpy as np
-
-    ts = rows.column(ts_col).to_numpy().astype(np.int64, copy=False)
-    order = np.argsort(ts, kind="stable")
-    return rows.take(order), ts[order]
-
-
-def _write_chunk_files(rows, man: dict, schema, directory: str) -> None:
-    """Write the Arrow ``rows`` into ``directory`` as the Spark path's
-    partitioned write would: ``chunk_us=<chunk>/`` directories holding
-    ts-sorted files, here one file per chunk, each committed by rename
-    (``sources/io.write_arrow_parquet``)."""
+def _write_chunk_files(
+    rows, man: dict, schema: T.StructType, directory: str, n_slices: int = 1
+) -> None:
+    """Write the Arrow ``rows`` into ``directory`` as :func:`_chunked_writer`
+    would: stably sorted by ts, cut at chunk boundaries into
+    ``chunk_us=<chunk>/`` directories, each chunk as ``n_slices``
+    contiguous slices (fewer when it has fewer rows), one file per
+    slice committed by rename (``sources/io.write_arrow_parquet``, with
+    ``schema`` in its footer)."""
     import numpy as np
 
     from open_rust_timeseries_db_spark.sources.io import write_arrow_parquet
 
     os.makedirs(directory, exist_ok=True)
-    rows, ts = _sorted_by_ts(rows, man["ts_col"])
+    ts = rows.column(man["ts_col"]).to_numpy().astype(np.int64, copy=False)
+    order = np.argsort(ts, kind="stable")
+    rows, ts = rows.take(order), ts[order]
     # np.mod is a floor modulo: the same chunk as Spark's pmod. The chunk
-    # is nondecreasing in ts, so the ts order is the (chunk, ts) order.
-    chunk = ts - np.mod(ts, man["chunk_us"])
-    cuts = [0, *(np.flatnonzero(np.diff(chunk)) + 1).tolist(), len(ts)]
-    for lo, hi in zip(cuts, cuts[1:]):
-        write_arrow_parquet(
-            rows.slice(lo, hi - lo),
-            os.path.join(directory, f"{_CHUNK_COL}={int(chunk[lo])}"),
-            schema,
-        )
-
-
-def _spark_append_writer(
-    df: DataFrame, man: dict, n_range_partitions: int | None
-):
-    """The Spark job that writes ``df`` into a directory as chunk
-    partitions, range-split and sorted by the manifest's order, as a
-    function of that directory."""
-    ts_col, chunk_us = man["ts_col"], man["chunk_us"]
-    chunk = (F.col(ts_col) - F.pmod(F.col(ts_col), F.lit(chunk_us))).cast(
-        "long"
-    )
-    order = man.get("order")
-    out = df.withColumn(_CHUNK_COL, chunk)
-    n = n_range_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    if order and order.get("type") == "zorder":
-        cols = [F.col(c) for c in order["cols"]]
-        bounds = [tuple(b) for b in order["bounds"]]
-        out = out.withColumn(
-            "__z", zorder_key(cols, bounds, order["bits"])
-        )
-        sort_cols = [_CHUNK_COL, "__z"]
-    else:
-        sort_cols = [_CHUNK_COL, ts_col]
-    out = out.repartitionByRange(n, *sort_cols).sortWithinPartitions(
-        *sort_cols
-    )
-    if "__z" in out.columns:
-        out = out.drop("__z")
-
-    def write(directory: str) -> None:
-        out.write.mode("append").partitionBy(_CHUNK_COL).parquet(directory)
-
-    return write
+    # is nondecreasing in ts, so each chunk is one run of the sorted rows.
+    chunks, starts = np.unique(ts - np.mod(ts, man["chunk_us"]), return_index=True)
+    ends = [*starts[1:].tolist(), len(ts)]
+    for chunk, lo, hi in zip(chunks.tolist(), starts.tolist(), ends):
+        n = min(n_slices, hi - lo)
+        cuts = [lo + (hi - lo) * i // n for i in range(n + 1)]
+        for a, b in zip(cuts, cuts[1:]):
+            write_arrow_parquet(
+                rows.slice(a, b - a),
+                os.path.join(directory, f"{_CHUNK_COL}={chunk}"),
+                schema,
+            )
 
 
 def append_time_layout(
@@ -476,16 +460,17 @@ def append_time_layout(
     not a union. Batch appends (``None``) write plain files straight
     into the chunk directories.
 
-    **Driver path.** A small plain file scan — ``df`` is
-    ``spark.read.parquet(...)`` of local parquet files under
-    ``_DRIVER_MAX_BYTES`` in total, appended into a time layout
-    (not Z-order) with no null timestamps — is read, sorted and written
-    with pyarrow on the driver, one ts-sorted file per chunk, each
-    committed by rename: no Spark job. Only the "write partitioned files
-    into a directory" step differs; the ``ingest_id`` staging and swap
-    below are the same for both paths. Every other input (filtered or
-    derived frames, Z-order layouts, null timestamps, large inputs) runs
-    as a Spark job.
+    **Driver path.** When ``df`` is a plain scan of local parquet files
+    (``spark.read.parquet(...)``, nothing on top), its files go through
+    the one driver gate, :func:`_driver_rows`, which compaction uses
+    too: a time layout, under ``_DRIVER_MAX_BYTES`` in total, an exact
+    decode with no null timestamps. Admitted rows are written by the
+    one driver writer, :func:`_write_chunk_files`, as one ts-sorted file
+    per chunk: no Spark job. Every other input (filtered or derived
+    frames, Z-order layouts, null timestamps, large inputs) is written
+    by :func:`_chunked_writer` as a Spark job. Only the "write
+    partitioned files into a directory" step differs; the ``ingest_id``
+    staging and swap below are the same for both paths.
 
     Raises ``ValueError`` when ``df``'s column names or types differ from
     the schema the manifest declares (nullability aside): readers scan
@@ -501,11 +486,11 @@ def append_time_layout(
                 f"append_time_layout: frame schema {df.schema.simpleString()}"
                 f" differs from the layout's {declared.simpleString()}"
             )
-    rows = _driver_rows(df, man)
+    rows = _driver_rows(_scan_files(df), man, df.schema)
     if rows is not None:
         write = functools.partial(_write_chunk_files, rows, man, df.schema)
     else:
-        write = _spark_append_writer(df, man, n_range_partitions)
+        write = _chunked_writer(df, man, n_range_partitions).mode("append").parquet
     if ingest_id is None:
         write(path)
         return
@@ -517,14 +502,12 @@ def append_time_layout(
     # lost the batch entirely). Same stage-then-swap discipline as
     # compact_chunks.
     scratch = os.path.join(path, f".ingest-{uuid.uuid4().hex[:8]}")
-    write(scratch)  # a fresh directory: append writes it whole
     try:
-        staged: dict[str, list[str]] = {}
-        for entry in os.listdir(scratch):
-            if entry.startswith(f"{_CHUNK_COL}="):
-                staged[entry] = sorted(
-                    f.name for f in _data_files(os.path.join(scratch, entry))
-                )
+        write(scratch)  # a fresh directory: append writes it whole
+        staged = {
+            entry: sorted(f.name for f in _data_files(os.path.join(scratch, entry)))
+            for entry, _ in _chunk_dirs(scratch)
+        }
         # Per chunk: delete THAT chunk's prior prefix files, then move
         # the staged replacements in. The unprotected window is one
         # chunk wide (a concurrent reader can see one chunk's slice of
@@ -548,8 +531,8 @@ def append_time_layout(
         # stream's monotonic batch id; a replay carries identical
         # data). Sweep them anyway so a contract violation converges
         # to replace-semantics instead of leaving orphans.
-        for entry in os.listdir(path):
-            if not entry.startswith(f"{_CHUNK_COL}=") or entry in staged:
+        for entry, _ in _chunk_dirs(path):
+            if entry in staged:
                 continue
             full = os.path.join(path, entry)
             for fname in os.listdir(full):
@@ -601,27 +584,21 @@ def _scan_is_small(
     spark: SparkSession, path: str, lo_chunk: int | None, hi_chunk: int | None
 ) -> bool:
     """Whether the data files of the chunks in [lo_chunk, hi_chunk]
-    total at most ``spark.sql.files.openCostInBytes``: Spark's own cost
-    of opening one file. Stops listing once the total passes it."""
+    (and of the null-ts chunk) total at most
+    ``spark.sql.files.openCostInBytes``: Spark's own cost of opening
+    one file. Stops listing once the total passes it."""
     budget = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
     total = 0
-    with os.scandir(path) as it:
-        for entry in it:
-            if not entry.name.startswith(f"{_CHUNK_COL}="):
-                continue
-            try:
-                chunk = int(entry.name.split("=", 1)[1])
-            except ValueError:  # the null-ts chunk: counted, never pruned
-                chunk = None
-            if chunk is not None and (
-                (lo_chunk is not None and chunk < lo_chunk)
-                or (hi_chunk is not None and chunk > hi_chunk)
-            ):
-                continue
-            for f in _data_files(entry.path):
-                total += f.stat().st_size
-                if total > budget:
-                    return False
+    for entry, chunk in _chunk_dirs(path):
+        if chunk is not None and (
+            (lo_chunk is not None and chunk < lo_chunk)
+            or (hi_chunk is not None and chunk > hi_chunk)
+        ):
+            continue
+        for f in _data_files(os.path.join(path, entry)):
+            total += f.stat().st_size
+            if total > budget:
+                return False
     return True
 
 
@@ -685,9 +662,7 @@ def chunk_file_stats(path: str) -> dict[str, dict]:
     chunk, bytes per file) is the same one compaction triggers on.
     """
     stats: dict[str, dict] = {}
-    for entry in sorted(os.listdir(path)):
-        if not entry.startswith(f"{_CHUNK_COL}="):
-            continue
+    for entry, _ in _chunk_dirs(path):
         files = list(_data_files(os.path.join(path, entry)))
         stats[entry] = {
             "n_files": len(files),
@@ -703,7 +678,8 @@ def drop_chunks_before(path: str, cutoff_us: int) -> list[str]:
     only when that whole interval precedes the cutoff — rows at or
     past the cutoff are never touched, so retention is always
     conservative (a partially-expired chunk survives until its last
-    row ages out). This is the hypertable `drop_chunks` pattern: data
+    row ages out). The null-ts chunk has no interval and is never
+    dropped. This is the hypertable `drop_chunks` pattern: data
     expiry as O(#chunks) directory deletes, never a rewrite — the only
     affordable way to expire data from a 100 TB archive. The manifest
     is untouched (layout geometry survives an empty table). Returns
@@ -712,11 +688,8 @@ def drop_chunks_before(path: str, cutoff_us: int) -> list[str]:
     man = read_manifest(path)
     chunk_us = man["chunk_us"]
     dropped: list[str] = []
-    for entry in sorted(os.listdir(path)):
-        if not entry.startswith(f"{_CHUNK_COL}="):
-            continue
-        chunk_lo = int(entry.split("=", 1)[1])
-        if chunk_lo + chunk_us <= cutoff_us:
+    for entry, chunk in _chunk_dirs(path):
+        if chunk is not None and chunk + chunk_us <= cutoff_us:
             shutil.rmtree(os.path.join(path, entry))
             dropped.append(entry)
     return dropped
@@ -731,29 +704,32 @@ def compact_chunks(
     """Rewrite each chunk's small files into ~target-size sorted files.
 
     For every chunk directory holding ``min_files_to_compact`` or more
-    files AND averaging under the target size, read the chunk, re-sort
-    by the manifest timestamp (restoring the ordered-file property that
-    interleaved streaming commits destroyed), and write
-    ``ceil(bytes / target)`` files. The rewrite goes to a scratch
-    directory first and replaces the chunk with two ``os.rename`` calls
-    — readers race against an atomic swap, never a partial directory.
-    At cluster scale this per-chunk commit is exactly what a table
-    format's snapshot swap provides; chunks are independent, so a real
-    deployment fans the loop out as one job per chunk.
+    files AND averaging under the target size, the chunk's rows are
+    appended into a fresh scratch directory by the same writer an
+    append uses, range-split into ``ceil(bytes / target)`` files and
+    re-sorted in the manifest's order (restoring the ordered-file
+    property that interleaved streaming commits destroyed). The
+    scratch's ``chunk_us=<chunk>`` directory then replaces the chunk
+    with two ``os.rename`` calls — readers race against an atomic swap,
+    never a partial directory. The swap refuses (raising, the chunk
+    untouched) when the scratch holds any other directory: rows whose
+    timestamps place them in another chunk. At cluster scale this
+    per-chunk commit is exactly what a table format's snapshot swap
+    provides; chunks are independent, so a real deployment fans the
+    loop out as one job per chunk.
 
     Returns {chunk_dir: (files_before, files_after)} for the chunks
     rewritten, counting data files as :func:`chunk_file_stats` does.
 
-    **Driver path.** A chunk of a time layout (no ``order`` in the
-    manifest) under ``_DRIVER_MAX_BYTES`` whose files all decode to the
-    Arrow types of the manifest's declared schema, with no null
-    timestamps, is rewritten on the driver: its files are concatenated
-    with pyarrow, stably sorted by ts and written as ``ceil(bytes /
-    target)`` contiguous slices (``sources/io.write_arrow_parquet``,
-    Spark's schema in each footer), with no Spark job. Only the rewrite
-    step differs; the scratch directory and two-rename swap are the
-    same. Z-order layouts, large chunks and files of other types run
-    the Spark job below.
+    **Driver path.** The chunk's files go through the one driver gate,
+    :func:`_driver_rows`, with the manifest's declared schema: a time
+    layout, under ``_DRIVER_MAX_BYTES``, an exact decode with no null
+    timestamps. Admitted rows are written by the one driver writer,
+    :func:`_write_chunk_files`, as ``ceil(bytes / target)`` contiguous
+    ts-sorted slices with Spark's schema in each footer: no Spark job.
+    Z-order layouts, the null-ts chunk, large chunks and files of other
+    types are written by :func:`_chunked_writer` as a Spark job. Only
+    the write into scratch differs; the swap is the same.
 
     Chunks are independent, so their rewrite jobs run CONCURRENTLY from
     a small driver thread pool (guide-standard overlap of independent
@@ -766,63 +742,35 @@ def compact_chunks(
     the "one job per chunk, fanned out" deployment the serial loop was
     documented as standing in for.
     """
-    from open_rust_timeseries_db_spark.sources.io import write_arrow_parquet
-
     man = read_manifest(path)
-    ts_col = man["ts_col"]
-    order = man.get("order")
     schema = _declared_schema(man)
 
     def compact_one(entry: str, st: dict) -> tuple[str, tuple[int, int]]:
         full = os.path.join(path, entry)
         n_out = max(1, math.ceil(st["bytes"] / target_file_bytes))
         scratch = os.path.join(path, f".compact-{uuid.uuid4().hex[:8]}")
-        rows = None
-        if not order and schema is not None and st["bytes"] < _DRIVER_MAX_BYTES:
-            files = [f.path for f in _data_files(full)]
-            rows = _arrow_rows(files, schema, ts_col)
-        if rows is not None:
-            # Contiguous slices of the ts-sorted rows: the files the
-            # Spark path's range split writes, with no Spark job.
-            rows, _ = _sorted_by_ts(rows, ts_col)
-            # No empty slices; a chunk of empty files still gets one file.
-            n = min(n_out, rows.num_rows) or 1
-            cuts = [rows.num_rows * i // n for i in range(n + 1)]
-            for lo, hi in zip(cuts, cuts[1:]):
-                write_arrow_parquet(rows.slice(lo, hi - lo), scratch, schema)
-        else:
-            reader = spark.read if schema is None else spark.read.schema(schema)
-            chunk_df = reader.parquet(full)
-            if order and order.get("type") == "zorder":
-                # Restore the manifest's Morton clustering, not plain ts
-                # order — compaction must preserve the layout's 2-D
-                # pruning contract, reusing the recorded grid.
-                zk = zorder_key(
-                    [F.col(c) for c in order["cols"]],
-                    [tuple(b) for b in order["bounds"]],
-                    order["bits"],
-                )
-                sorted_df = (
-                    chunk_df.withColumn("__z", zk)
-                    .repartitionByRange(n_out, "__z")
-                    .sortWithinPartitions("__z")
-                    .drop("__z")
-                )
+        try:
+            rows = _driver_rows([f.path for f in _data_files(full)], man, schema)
+            if rows is not None:
+                _write_chunk_files(rows, man, schema, scratch, n_out)
             else:
-                sorted_df = chunk_df.repartitionByRange(
-                    n_out, ts_col
-                ).sortWithinPartitions(ts_col)
-            sorted_df.write.mode("overwrite").parquet(scratch)
-            # Drop the batch writer's _SUCCESS marker (and its checksum)
-            # so the swapped-in directory holds only data files like the
-            # original chunk.
-            for marker in ("_SUCCESS", "._SUCCESS.crc"):
-                if os.path.exists(os.path.join(scratch, marker)):
-                    os.remove(os.path.join(scratch, marker))
-        trash = os.path.join(path, f".trash-{uuid.uuid4().hex[:8]}")
-        os.rename(full, trash)
-        os.rename(scratch, full)
-        shutil.rmtree(trash, ignore_errors=True)
+                reader = spark.read if schema is None else spark.read.schema(schema)
+                writer = _chunked_writer(reader.parquet(full), man, n_out)
+                writer.mode("append").parquet(scratch)
+            others = [e for e, _ in _chunk_dirs(scratch) if e != entry]
+            if others:
+                raise RuntimeError(
+                    f"compact_chunks: rows of {entry} belong to {others}; "
+                    "the chunk is left as it was"
+                )
+            staged = os.path.join(scratch, entry)
+            os.makedirs(staged, exist_ok=True)  # a chunk of no rows: no file
+            trash = os.path.join(path, f".trash-{uuid.uuid4().hex[:8]}")
+            os.rename(full, trash)
+            os.rename(staged, full)
+            shutil.rmtree(trash, ignore_errors=True)
+        finally:
+            shutil.rmtree(scratch, ignore_errors=True)
         return entry, (st["n_files"], sum(1 for _ in _data_files(full)))
 
     todo = [

@@ -90,25 +90,26 @@ def test_scale_path_matches_broadcast_path(spark, monkeypatch):
     advice found the q_minhash_jaccard scale path threw
     AMBIGUOUS_REFERENCE — it had never been executed."""
     import open_rust_timeseries_db_spark.operators.dedupe as dd
-    import open_rust_timeseries_db_spark.queries.registry as registry
     from open_rust_timeseries_db_spark.queries import all_queries
 
-    # Disable the prepared-plan memo: without this, the second fn()
-    # call below would return the memoized BROADCAST-path plan and the
-    # grouped scale path would never execute (round-5 advice: the
-    # assertion passed vacuously).
-    monkeypatch.setattr(registry, "PLAN_MEMO_ENABLED", False)
-    qs = all_queries()
+    # Build through the unmemoized builders: the prepared-plan memo
+    # would serve the second call below the BROADCAST-path plan, and the
+    # grouped scale path would never execute (the assertion would pass
+    # vacuously).
+    qs = {
+        n: getattr(spec.fn, "__wrapped__", spec.fn)
+        for n, spec in all_queries().items()
+    }
     # q_contamination shares the same gate: broadcast train-shingle
     # dictionary when small, grouped single-shuffle shape at scale.
     names = ("q_minhash_jaccard", "q_dedup_near", "q_simhash",
              "q_ngram_jaccard", "q_contamination")
     small = {
-        n: {tuple(r) for r in qs[n].fn(spark, SF_DIR).collect()} for n in names
+        n: {tuple(r) for r in qs[n](spark, SF_DIR).collect()} for n in names
     }
     monkeypatch.setattr(dd, "BROADCAST_MAX_BYTES", 0)
     for n in names:
-        forced = {tuple(r) for r in qs[n].fn(spark, SF_DIR).collect()}
+        forced = {tuple(r) for r in qs[n](spark, SF_DIR).collect()}
         assert forced == small[n], f"{n}: scale path diverges from broadcast path"
     assert any(len(v) > 0 for v in small.values())
 
@@ -206,14 +207,12 @@ def test_hot_bucket_skew_paths_agree(spark, monkeypatch):
     from pathlib import Path
 
     import open_rust_timeseries_db_spark.operators.dedupe as dd
-    import open_rust_timeseries_db_spark.queries.registry as registry
 
     sb_path = Path(__file__).resolve().parent.parent / "scripts" / "scale_bench.py"
     mspec = importlib.util.spec_from_file_location("scale_bench", sb_path)
     sb = importlib.util.module_from_spec(mspec)
     mspec.loader.exec_module(sb)
 
-    monkeypatch.setattr(registry, "PLAN_MEMO_ENABLED", False)
     sk = sb.skewed_documents(spark, "/root/testdata/sf0.001", hot_every=10)
     hot_ids = {r["doc_id"] for r in sk.filter("doc_id % 10 = 1").select("doc_id").collect()}
     n_hot = len(hot_ids)

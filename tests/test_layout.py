@@ -761,6 +761,17 @@ class TestDriverAppend:
         assert calls == []
         assert spark.read.parquet(path).count() == ev.count()
 
+    def test_empty_scan_appends_no_file(self, spark, tmp_path, monkeypatch):
+        ev = self._events(spark)
+        path, stage = str(tmp_path / "layout"), str(tmp_path / "stage")
+        write_time_layout(ev, path, ts_col="ts_us")
+        ev.limit(0).write.parquet(stage)
+        files = _layout_files(path)
+        calls = _spy_driver_appends(monkeypatch)
+        append_time_layout(spark.read.parquet(stage), path)
+        assert calls == [path]
+        assert _layout_files(path) == files
+
 
 def _job_ids(spark) -> set[int]:
     """Ids of the session's jobs outside any job group, once the listener
@@ -990,3 +1001,69 @@ class TestDriverCompaction:
         }
         for chunk in done:
             assert "._SUCCESS.crc" not in os.listdir(os.path.join(path, chunk))
+
+
+class TestNullTsChunk:
+    """Rows with a null timestamp land, through a Spark-path append, in
+    the ``__HIVE_DEFAULT_PARTITION__`` chunk: retention never expires it
+    and compaction rewrites it through the Spark path."""
+
+    NULL = "chunk_us=__HIVE_DEFAULT_PARTITION__"
+
+    def _layout(self, spark, path: str) -> None:
+        # One file per dated chunk, so only the null-ts chunk compacts;
+        # two appends of filtered frames (the Spark path) give it two.
+        ev = events_us(spark, SF_DIR).select(*COLS)
+        write_time_layout(ev, path, ts_col="ts_us", n_range_partitions=1)
+        for r in (0, 1):
+            nulls = ev.filter(F.col("event_id") % 10 == r)
+            append_time_layout(
+                nulls.withColumn("ts_us", F.lit(None).cast("long")), path
+            )
+        assert chunk_file_stats(path)[self.NULL]["n_files"] >= 2
+
+    def _null_rows(self, spark, path: str) -> list[tuple]:
+        return _rows(read_time_range(spark, path).filter(F.col("ts_us").isNull()))
+
+    def test_retention_keeps_the_null_ts_chunk(self, spark, tmp_path):
+        path = str(tmp_path / "layout")
+        self._layout(spark, path)
+        want = self._null_rows(spark, path)
+        dropped = drop_chunks_before(path, 1 << 62)
+        assert dropped and self.NULL not in dropped
+        assert list(chunk_file_stats(path)) == [self.NULL]
+        assert _rows(read_time_range(spark, path)) == want
+
+    def test_null_ts_chunk_compacts_through_spark(self, spark, tmp_path):
+        path = str(tmp_path / "layout")
+        self._layout(spark, path)
+        want = self._null_rows(spark, path)
+        n_before = chunk_file_stats(path)[self.NULL]["n_files"]
+
+        before = _job_ids(spark)
+        done = compact_chunks(spark, path, target_file_bytes=8 << 20)
+        assert done == {self.NULL: (n_before, 1)}
+        assert _job_ids(spark) - before, "the null-ts chunk ran no Spark job"
+        scratch = (".compact-", ".trash-")
+        assert not [e for e in os.listdir(path) if e.startswith(scratch)]
+        assert self._null_rows(spark, path) == want
+
+    def test_swap_refuses_rows_of_another_chunk(self, spark, tmp_path):
+        import shutil
+
+        path = str(tmp_path / "layout")
+        self._layout(spark, path)
+        # A dated chunk's file inside the null-ts chunk: its rows are
+        # rewritten into their own chunk directory in the scratch.
+        dated = next(
+            f for f in sorted(_layout_files(path)) if not f.startswith(self.NULL)
+        )
+        shutil.copy(
+            os.path.join(path, dated), os.path.join(path, self.NULL, "stray.parquet")
+        )
+        files = _layout_files(path)
+        with pytest.raises(RuntimeError, match="left as it was"):
+            compact_chunks(spark, path, target_file_bytes=8 << 20)
+        assert _layout_files(path) == files
+        scratch = (".compact-", ".trash-")
+        assert not [e for e in os.listdir(path) if e.startswith(scratch)]
