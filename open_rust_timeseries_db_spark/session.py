@@ -50,7 +50,8 @@ def _default_driver_memory() -> tuple[str, bool]:
 
 
 def _default_local_dir() -> str:
-    """tmpfs shuffle scratch only when /dev/shm can actually hold it.
+    """tmpfs scratch only when /dev/shm can actually hold it: the
+    engine's one tmpfs decision (shuffle, spill and :func:`scratch_path`).
 
     Containers commonly mount /dev/shm at 64 MB; a heavy shuffle there
     dies on ENOSPC. Require several GiB free before leaving disk.
@@ -63,6 +64,16 @@ def _default_local_dir() -> str:
     except OSError:
         pass
     return "/tmp"
+
+
+def scratch_path(spark: SparkSession, name: str) -> str:
+    """Path of the session artifact ``name`` (a layout copy, a drain
+    checkpoint) under ``graft/`` in the driver's ``SparkFiles`` root,
+    ``<spark.local.dir>/spark-<uuid>/userFiles-<uuid>``, which Spark
+    deletes at ``spark.stop()``. Executors read it by path: on a
+    multi-host cluster ``spark.local.dir`` must be shared storage."""
+    root = spark._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    return os.path.join(root, "graft", name)
 
 # Runtime-settable SQL confs applied to any session we touch.
 # ``tune_session`` sets them with ``spark.conf.set``, so none may be a
@@ -107,6 +118,10 @@ STATIC_CONFS: dict[str, str] = {
     "spark.sql.codegen.cache.maxEntries": "10000",
 }
 
+# ``spark.python.worker.module`` of a ``get_spark`` session (a core conf,
+# fixed at context start): the top-level ``pyspark_graft_worker.py``.
+WORKER_MODULE = "pyspark_graft_worker"
+
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply this engine's runtime confs to an existing session. A conf
@@ -126,6 +141,10 @@ def get_spark(
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default all cores).
     Shuffle partitions default to the core count — right-sized for local
     benchmarking; on a real cluster this is AQE-coalesced anyway.
+    ``spark.local.dir``, which holds the session's artifacts
+    (:func:`scratch_path`), is ``SPARK_LOCAL_DIRS`` or
+    :func:`_default_local_dir`. Python workers must import
+    :data:`WORKER_MODULE` as they import the package.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
@@ -161,17 +180,14 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", java_opts),
         )
-        # Shuffle/spill scratch on tmpfs when the host's /dev/shm can
-        # actually hold a heavy shuffle (_default_local_dir checks
-        # free space — container /dev/shm is commonly 64 MB): the
-        # bench box's /tmp is virtio disk whose I/O latency swings
-        # ~2x between passes (measured on the sf1 pair shuffles);
-        # session scratch is ephemeral by definition, same policy as
-        # the layout ckpts and streaming checkpoints.
+        # Session scratch on tmpfs when it has room: the bench box's
+        # /tmp is virtio disk whose I/O latency swings ~2x between
+        # passes (measured on the sf1 pair shuffles).
         .config(
             "spark.local.dir",
             os.environ.get("SPARK_LOCAL_DIRS", _default_local_dir()),
         )
+        .config("spark.python.worker.module", WORKER_MODULE)
         # Anything Spark writes to its catalog warehouse goes to a
         # scratch dir, never the working directory.
         .config(

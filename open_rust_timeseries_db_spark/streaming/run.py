@@ -14,20 +14,12 @@ stop. Sinks:
 
 from __future__ import annotations
 
-import os
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Bounded verification drains put their checkpoint (offset/commit logs
-# + state files, several fsyncs per micro-batch) on tmpfs when the host
-# has one: measured ~25% off q_stream_ohlc wall time. Semantically safe
-# HERE ONLY because the memory sink is already ephemeral — the drain is
-# a one-shot verification, not a resumable pipeline. A durable pipeline
-# (foreach_batch_parquet) must checkpoint to durable storage; never
-# copy this into one.
-_SHM_CKPT_ROOT = "/dev/shm/spark-graft-ckpt"
+from open_rust_timeseries_db_spark.session import scratch_path
 
 # Diagnostic: the last bounded drain's per-batch durationMs maps
 # (addBatch / queryPlanning / walCommit / ...), captured before the
@@ -50,6 +42,10 @@ def run_available_now_to_memory(
     sink (bounded output only: aggregates or small key sets). Durable
     pipelines use :func:`foreach_batch_parquet`.
 
+    The checkpoint (``session.scratch_path``) is removed after the
+    drain: safe only because the memory sink is ephemeral too. A
+    resumable pipeline must checkpoint to durable storage.
+
     ``state_partitions`` sizes the stateful-operator partitioning.
     Unlike batch shuffles, streaming state partitions are NOT
     AQE-coalesced and are frozen into the checkpoint at first start, so
@@ -63,23 +59,20 @@ def run_available_now_to_memory(
     """
     name = f"mem_{uuid.uuid4().hex[:12]}"
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    ckpt_dir = None
-    if os.path.isdir("/dev/shm"):
-        ckpt_dir = os.path.join(_SHM_CKPT_ROOT, name)
+    ckpt_dir = scratch_path(spark, name)
     if state_partitions is not None:
         # Captured at .start() when the stateful plan is bound; restored
         # immediately after so batch queries are unaffected.
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        writer = (
+        q = (
             stream.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
             .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt_dir)
+            .start()
         )
-        if ckpt_dir is not None:
-            writer = writer.option("checkpointLocation", ckpt_dir)
-        q = writer.start()
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", old_parts)
@@ -99,8 +92,7 @@ def run_available_now_to_memory(
             pass
         if q.isActive:
             q.stop()
-        if ckpt_dir is not None:
-            shutil.rmtree(ckpt_dir, ignore_errors=True)
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
         # Unload this drain's state-store providers NOW instead of
         # waiting for the maintenance thread (60 s default): each
         # provider keeps its full loaded key map on-heap after the

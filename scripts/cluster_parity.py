@@ -39,6 +39,8 @@ MEM_MB = int(sys.argv[4]) if len(sys.argv) > 4 else 4096
 def main() -> int:
     from pyspark.sql import SparkSession
 
+    from open_rust_timeseries_db_spark.session import WORKER_MODULE
+
     spark = (
         SparkSession.builder.master(
             f"local-cluster[{WORKERS},{CORES},{MEM_MB}]"
@@ -53,6 +55,9 @@ def main() -> int:
             "spark.executorEnv.PYTHONPATH",
             str(Path(__file__).resolve().parent.parent),
         )
+        # The engine's worker module, so executor-side Python workers
+        # start it as get_spark sessions do.
+        .config("spark.python.worker.module", WORKER_MODULE)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

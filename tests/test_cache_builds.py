@@ -145,5 +145,5 @@ def test_session_cache_keys_on_app_and_scope(spark, tmp_path, build):
         assert fresh is not first
         assert build(spark, str(other)) is fresh
     finally:
-        if isinstance(fresh, str):  # a layout copy on tmpfs
+        if isinstance(fresh, str):  # a layout copy under the session root
             shutil.rmtree(fresh, ignore_errors=True)

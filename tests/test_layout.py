@@ -559,6 +559,32 @@ def test_replay_staging_failure_keeps_committed_batch(spark, tmp_path):
     assert not [e for e in os.listdir(path) if e.startswith(".ingest-")]
 
 
+def test_replay_after_compaction_is_a_no_op(spark, tmp_path):
+    """Compaction renames a batch's ``ingest-<id>-`` files away, so a
+    replay that came after it found no files to replace and appended
+    the batch a second time (20 rows here). The manifest's
+    ``committed_ingest_id`` makes that replay a no-op."""
+    rows = [(i, i % 3, 1_000 + i, float(i)) for i in range(15)]
+    ev = spark.createDataFrame(rows, "event_id long, user_id long, ts_us long, value double")
+    path = str(tmp_path / "replayed")
+    write_time_layout(ev.filter("event_id < 10"), path, ts_col="ts_us", n_range_partitions=1)
+    src = str(tmp_path / "batch")
+    ev.filter("event_id >= 10").coalesce(1).write.parquet(src)
+    batch = spark.read.parquet(src)
+
+    append_time_layout(batch, path, ingest_id=7)
+    assert read_time_range(spark, path).count() == 15
+    append_time_layout(batch, path, ingest_id=7)
+    assert read_time_range(spark, path).count() == 15
+    assert compact_chunks(spark, path) == {"chunk_us=0": (2, 1)}
+    append_time_layout(batch, path, ingest_id=7)
+    got = read_time_range(spark, path).orderBy("event_id").collect()
+    assert [tuple(r) for r in got] == rows
+    # A later batch id still appends.
+    append_time_layout(batch, path, ingest_id=8)
+    assert read_time_range(spark, path).count() == 20
+
+
 def test_retention_drops_only_fully_expired_chunks(spark, tmp_path):
     """drop_chunks_before is conservative: a chunk is deleted only when
     its WHOLE interval precedes the cutoff; reads after retention see
