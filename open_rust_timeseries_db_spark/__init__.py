@@ -19,8 +19,8 @@ columns, text analysis) form this engine's query inventory.
 """
 
 from open_rust_timeseries_db_spark.session import get_spark
-from open_rust_timeseries_db_spark.sources.catalog import load_table, register_views
+from open_rust_timeseries_db_spark.sources.catalog import load_table
 
-__all__ = ["get_spark", "load_table", "register_views"]
+__all__ = ["get_spark", "load_table"]
 
 __version__ = "0.1.0"

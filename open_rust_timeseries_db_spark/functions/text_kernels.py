@@ -26,12 +26,8 @@ Bit-parity contract (so DuckDB oracles stay valid):
 - internal shingle ids (``hs``) are join keys only (never surfaced),
   so they need injectivity, not cross-engine parity. The profile
   kernel derives them from the md5 digest it must compute anyway
-  (first 8 bytes as int64); the EXPLODED kernel — where no md5 is
-  otherwise needed — hashes each token once with pandas'
-  C-vectorized 64-bit siphash and mixes token triples with an odd-
-  multiplier polynomial, ~10x faster than per-string md5 in a Python
-  loop. Either way collisions are ~n^2/2^64 — negligible at any
-  realistic shard size.
+  (first 8 bytes as int64); collisions are ~n^2/2^64, negligible at
+  any realistic shard size.
 
 Scale shape: every kernel is a NARROW map (one output row per input
 document, or none for sub-n-token docs) — no shuffle, no state; the
@@ -240,14 +236,6 @@ _PROFILE_SCHEMA = T.StructType(
     ]
 )
 
-_EXPLODED_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("n_sh", T.LongType()),
-        T.StructField("hs", T.LongType()),
-    ]
-)
-
 _SIMHASH_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType()),
@@ -276,88 +264,6 @@ def _kernel_input(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return spread_scan(docs, partitions=max(8, parallelism // 2)).select(
         id_col, text_col
     )
-
-
-def shingle_hashes_pd(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """EXPLODED per-document shingles in one Arrow pass: one row per
-    (document, distinct shingle) — (id, n_sh, hs: int64 shingle id).
-
-    The exploded form feeds the shingle-equi-join candidate generator
-    (operators/dedupe.exact_jaccard) and q_contamination: emitting rows
-    directly from the kernel skips building array columns only to
-    explode them JVM-side.
-
-    Unlike the profile kernel (whose MinHash base must be md5 for
-    oracle parity), these ids never leave the engine, so hashing is
-    fully vectorized: every token in the batch is hashed ONCE by
-    pandas' C siphash (deterministic fixed key, stable across workers
-    and sessions), and each n-token window mixes its token hashes with
-    an odd-multiplier uint64 polynomial — no per-shingle Python md5
-    call, no shingle string ever built. Measured ~10x faster than the
-    md5-loop formulation it replaced (round-2 verdict: the kernel pass
-    dominated q_ngram_jaccard's and q_contamination's cold time).
-    """
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        # Odd multiplier (golden-ratio constant) for the triple mix:
-        # h = (h1*A + h2)*A + h3 in wrapping uint64 arithmetic.
-        mix_a = np.uint64(0x9E3779B97F4A7C15)
-        empty = pd.DataFrame(
-            {
-                "id": pd.Series([], dtype="int64"),
-                "n_sh": pd.Series([], dtype="int64"),
-                "hs": pd.Series([], dtype="int64"),
-            }
-        )
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            tok_lists = [_toks(t) for t in pdf[text_col]]
-            flat = [w for toks in tok_lists for w in toks]
-            if not flat:
-                yield empty
-                continue
-            # One C-vectorized hash pass over every token occurrence.
-            th = pd.util.hash_array(np.asarray(flat, dtype=object))
-            out_ids, out_nsh, out_hs = [], [], []
-            pos = 0
-            old = np.seterr(over="ignore")  # uint64 wraparound intended
-            try:
-                for doc_id, toks in zip(pdf[id_col], tok_lists):
-                    ln = len(toks)
-                    v = th[pos : pos + ln]
-                    pos += ln
-                    if ln < n:
-                        continue
-                    h = v[: ln - n + 1].copy()
-                    for j in range(1, n):
-                        h = h * mix_a + v[j : ln - n + 1 + j]
-                    uniq = np.unique(h)
-                    out_ids.append(np.full(len(uniq), doc_id, dtype="int64"))
-                    out_nsh.append(np.full(len(uniq), len(uniq), dtype="int64"))
-                    out_hs.append(uniq.view(np.int64))
-            finally:
-                np.seterr(**old)
-            if not out_ids:
-                yield empty
-                continue
-            yield pd.DataFrame(
-                {
-                    "id": np.concatenate(out_ids),
-                    "n_sh": np.concatenate(out_nsh),
-                    "hs": np.concatenate(out_hs),
-                }
-            )
-
-    return _kernel_input(docs, id_col, text_col).mapInPandas(gen, _EXPLODED_SCHEMA)
 
 
 def shingle_profile_pd(
@@ -576,14 +482,6 @@ def winnow_fp_pd(
     return _kernel_input(docs, id_col, text_col).mapInPandas(gen, _WINNOW_SCHEMA)
 
 
-_DOC_BIGRAM_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("bigram", T.StringType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
 _DOC_GRAM_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType()),
@@ -601,8 +499,8 @@ def doc_gram_counts_pd(
     (id, kind, gram, n), kind 1 = token, kind 2 = bigram.
 
     Fuses what used to be two separate corpus reads — a JVM
-    explode+hash-agg for the (doc, term, tf) table and the
-    doc_bigram_counts kernel — into a single tokenization: the flat
+    explode+hash-agg for the (doc, term, tf) table and a per-document
+    bigram kernel — into a single tokenization: the flat
     token array per batch feeds both the (doc, token) histogram and the
     shifted-concat bigram histogram. At 100 TB this is one corpus scan
     feeding the whole term-frequency AND language-model family.
@@ -689,77 +587,16 @@ def doc_gram_counts_ckpt(
     )
 
 
-def doc_bigram_counts_pd(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document bigram occurrence counts in one Arrow pass:
-    (id, bigram, n) — the per-doc twin of bigram_partial_counts_pd,
-    feeding per-document LM scoring (q_lm_score).
-
-    Same vectorization: one flat token array per batch, bigram strings
-    from a single C-loop concat against the shifted array, document
-    boundaries masked positionally; the (doc, bigram) histogram comes
-    from one pandas C groupby — no per-doc Python loop. Output is
-    per-doc-DISTINCT sized (repetition collapses in the batch), and the
-    rows are exact (doc-keyed), so no further aggregation is needed."""
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "id": pd.Series([], dtype="int64"),
-                "bigram": pd.Series([], dtype="object"),
-                "n": pd.Series([], dtype="int64"),
-            }
-        )
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            tok_lists = [_toks(t) for t in pdf[text_col]]
-            lens = np.fromiter(
-                (len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists)
-            )
-            flat = np.array(
-                [w for toks in tok_lists for w in toks], dtype=object
-            )
-            if len(flat) < 2:
-                yield empty
-                continue
-            doc_of = np.repeat(
-                pdf[id_col].to_numpy(dtype=np.int64), lens
-            )[:-1]
-            pairs = pd.Series(flat[:-1]) + " " + pd.Series(flat[1:])
-            valid = np.ones(len(flat) - 1, dtype=bool)
-            ends = np.cumsum(lens)
-            boundary = ends[:-1][ends[:-1] < len(flat)] - 1
-            valid[boundary[boundary >= 0]] = False
-            hist = (
-                pd.DataFrame({"id": doc_of[valid], "bigram": pairs[valid].to_numpy()})
-                .groupby(["id", "bigram"], sort=False)
-                .size()
-                .reset_index(name="n")
-            )
-            yield hist.astype({"id": "int64", "n": "int64"})
-
-    return _kernel_input(docs, id_col, text_col).mapInPandas(
-        gen, _DOC_BIGRAM_SCHEMA
-    )
-
-
 def doc_bigram_counts_ckpt(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Session-cached per-document bigram counts (see
-    doc_bigram_counts_pd)."""
+    """Session-cached per-document bigram counts (id, bigram, n): the
+    ``kind == 2`` rows of doc_gram_counts_pd."""
     # DERIVED from the fused doc-gram kernel (one tokenization pass
     # shared with the term-frequency family); inherits the parent's
     # id partitioning, so the LM-score and repetition-ratio per-doc
     # rollups elide their exchange (the broadcast LM join in between
     # preserves the probe side's partitioning).
-    # doc_bigram_counts_pd remains the standalone (property-tested)
-    # single-output kernel.
     def build() -> DataFrame:
         grams = doc_gram_counts_ckpt(docs, id_col, text_col)
         return grams.filter(F.col("kind") == 2).select(
@@ -809,14 +646,11 @@ def shingle_hashes_ckpt(
     # exploded table is one JVM explode of those cached blocks, saving
     # a full tokenize+hash corpus pass per session (and per scan at
     # 100 TB: the profile is the one kernel read; everything shingle-
-    # shaped derives from it). The ids switch from the standalone
-    # kernel's siphash-poly family to the profile's md5-64 family —
-    # both are internal join/intersect keys only (never surfaced,
-    # never mixed across families), so any injective id works;
-    # shingle_hashes_pd remains the standalone (property-tested)
-    # kernel. Partitioned by shingle id: the grouped (scale-path) pair
-    # expansion groups by hs with no exchange; the broadcast path
-    # probes and is indifferent.
+    # shaped derives from it). The ids are the profile's md5-64
+    # family: internal join/intersect keys only (never surfaced), so
+    # any injective id works. Partitioned by shingle id: the grouped
+    # (scale-path) pair expansion groups by hs with no exchange; the
+    # broadcast path probes and is indifferent.
     return _cached_ckpt(
         docs,
         lambda: shingle_profile_ckpt(docs, id_col, text_col, n, len(MH_AB))
@@ -937,81 +771,6 @@ def doc_term_tf_ckpt(
     )
 
 
-_BIGRAM_SCHEMA = T.StructType(
-    [
-        T.StructField("bigram", T.StringType()),
-        T.StructField("w1", T.StringType()),
-        T.StructField("n_bigram", T.LongType()),
-    ]
-)
-
-
-def bigram_partial_counts_pd(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-batch PARTIAL bigram counts in one Arrow pass:
-    (bigram, w1, n_bigram) — a hand-rolled map-side combine.
-
-    Replaces the explode(word_shingles(...)) formulation: the JVM HOF
-    chain is evaluated interpreted per element (the same slow path the
-    shingle kernels left), and the exploded form shuffles one row per
-    bigram OCCURRENCE. Natural-language bigrams are massively repeated
-    (testdata corpus: 265k occurrences, 931 distinct), so counting
-    inside the batch with pandas' C value_counts emits ~vocabulary-
-    sized partials per batch — the shuffle carries counts, not
-    occurrences. Callers re-aggregate with a final groupBy sum.
-
-    Vectorized: one flat token array per batch; bigram strings built by
-    a single C-loop concat of the array against its shift; document
-    boundaries masked out positionally (no per-doc Python loop)."""
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "bigram": pd.Series([], dtype="object"),
-                "w1": pd.Series([], dtype="object"),
-                "n_bigram": pd.Series([], dtype="int64"),
-            }
-        )
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            tok_lists = [_toks(t) for t in pdf[text_col]]
-            lens = np.fromiter(
-                (len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists)
-            )
-            flat = np.array(
-                [w for toks in tok_lists for w in toks], dtype=object
-            )
-            if len(flat) < 2:
-                yield empty
-                continue
-            # Positions where a bigram would span two documents: the
-            # last token of each doc (cumulative end offsets - 1).
-            ends = np.cumsum(lens)
-            w1 = pd.Series(flat[:-1])
-            pairs = w1 + " " + pd.Series(flat[1:])
-            valid = np.ones(len(flat) - 1, dtype=bool)
-            boundary = ends[:-1][ends[:-1] < len(flat)] - 1
-            valid[boundary[boundary >= 0]] = False
-            counts = pairs[valid].value_counts()
-            bigrams = counts.index.to_numpy(dtype=object)
-            yield pd.DataFrame(
-                {
-                    "bigram": bigrams,
-                    "w1": pd.Series(bigrams).str.split(" ", n=1).str[0],
-                    "n_bigram": counts.to_numpy(dtype="int64"),
-                }
-            )
-
-    return _kernel_input(docs, id_col, text_col).mapInPandas(
-        gen, _BIGRAM_SCHEMA
-    )
-
-
 def bigram_counts_ckpt(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -1023,13 +782,12 @@ def bigram_counts_ckpt(
     (doc_bigram_counts_ckpt) rather than a second Arrow tokenization
     pass: the whole bigram-LM family (q_ngram_lm_bigrams, q_lm_score,
     q_repetition_ratio) now shares ONE kernel pass over the corpus —
-    round-3's cold path paid tokenization twice (bigram_partial_counts
-    AND doc_bigram_counts), which was the bulk of q_lm_score's 7.7x
+    round-3's cold path paid tokenization twice (a corpus partial-count
+    kernel AND a per-document one), which was the bulk of q_lm_score's 7.7x
     cold ratio. The rollup shuffles per-doc-DISTINCT rows instead of
     batch partials — more rows, but count-carrying and map-side
     combined, and it reads already-cached Arrow output instead of
-    re-running Python tokenization. bigram_partial_counts_pd remains
-    the standalone single-output-kernel (property-tested) variant."""
+    re-running Python tokenization."""
     def build() -> DataFrame:
         db = doc_bigram_counts_ckpt(docs, id_col, text_col)
         return db.groupBy("bigram").agg(F.sum("n").alias("n_bigram")).select(

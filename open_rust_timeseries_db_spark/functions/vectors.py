@@ -187,120 +187,6 @@ def local_topk_cosine(
     return cand.select(id_col, vec_col).mapInPandas(score, out_schema)
 
 
-def ivf_probe_search(
-    emb,
-    centroids,
-    queries,
-    nprobe: int = 2,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    centroid_vec_col: str = "c_emb",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "q_emb",
-):
-    """Fused IVF probe search in ONE corpus pass.
-
-    Driver side (tiny, exact): collect the centroid and query matrices
-    once; rank all centroids per query with the same fixed-point
-    arithmetic and keep the top ``nprobe`` probe cells (ties by
-    centroid id ascending, matching the SQL oracle's ROW_NUMBER order).
-
-    Executor side (one narrow mapInPandas over the corpus): assign each
-    batch vector to its nearest centroid (identical to
-    :func:`ivf_assign`), keep vectors whose cell is probed by at least
-    one query, score ONLY those (query, candidate) combinations, and
-    emit each task's local top-k per query. The caller finishes with a
-    global window over O(tasks * Q * k) survivors.
-
-    Replaces a 7-job pipeline (checkpoint + probe kernel + assign pass
-    + 3 joins + scoring UDF) with: 2 driver collects + 1 corpus pass +
-    the survivor window — the shape a real IVF engine executes.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    cent_rows = _driver_rows(centroids, centroid_id_col, centroid_vec_col)
-    c_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    c_mat = np.vstack([np.asarray(r[1], dtype=np.float64) for r in cent_rows])
-    order = np.argsort(c_ids, kind="stable")
-    c_ids, c_mat = c_ids[order], c_mat[order]
-    c_n2 = np.floor(c_mat * c_mat * FX_SCALE).astype(np.int64).sum(axis=1)
-    c_den = np.sqrt(c_n2 / FX_SCALE)
-
-    q_rows = _driver_rows(queries, query_id_col, query_vec_col)
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.vstack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_n2 = np.floor(q_mat * q_mat * FX_SCALE).astype(np.int64).sum(axis=1)
-    q_den = np.sqrt(q_n2 / FX_SCALE)
-
-    # Probe selection on the driver: (Q, C) fixed-point cosine, top
-    # nprobe cells per query, ties centroid-id-ascending (c_* arrays
-    # are id-sorted, so lexsort on (-cos, index) is exactly that).
-    prods = q_mat[:, None, :] * c_mat[None, :, :]
-    dots = np.floor(prods * FX_SCALE).astype(np.int64).sum(axis=2)
-    qc_cos = (dots / FX_SCALE) / (q_den[:, None] * c_den[None, :])
-    probed_by: dict[int, list[int]] = {}  # centroid id -> query indexes
-    for qi in range(len(q_ids)):
-        top = np.lexsort((np.arange(len(c_ids)), -qc_cos[qi]))[:nprobe]
-        for ci in top:
-            probed_by.setdefault(int(c_ids[ci]), []).append(qi)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def search(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            n2 = np.floor(mat * mat * FX_SCALE).astype(np.int64).sum(axis=1)
-            den = np.sqrt(n2 / FX_SCALE)
-            # Nearest-centroid assignment, chunked like ivf_assign.
-            cell = np.empty(len(ids), dtype=np.int64)
-            chunk = max(1, (1 << 22) // max(1, c_mat.shape[0] * c_mat.shape[1]))
-            for lo in range(0, len(ids), chunk):
-                hi = min(len(ids), lo + chunk)
-                p = mat[lo:hi, None, :] * c_mat[None, :, :]
-                d = np.floor(p * FX_SCALE).astype(np.int64).sum(axis=2)
-                cos = (d / FX_SCALE) / (den[lo:hi, None] * c_den[None, :])
-                cell[lo:hi] = c_ids[np.argmax(cos, axis=1)]
-            qs_out, ns_out, cs_out = [], [], []
-            for qi in range(len(q_ids)):
-                probe_cells = [c for c, qs in probed_by.items() if qi in qs]
-                mask = np.isin(cell, probe_cells) & (ids != q_ids[qi])
-                if not mask.any():
-                    continue
-                c_ids_m, c_vecs = ids[mask], mat[mask]
-                c_dens = den[mask]
-                d = np.floor(c_vecs * q_mat[qi] * FX_SCALE).astype(np.int64).sum(axis=1)
-                cos = (d / FX_SCALE) / (c_dens * q_den[qi])
-                top = np.lexsort((c_ids_m, -cos))[:k]
-                qs_out.append(np.full(len(top), q_ids[qi], dtype=np.int64))
-                ns_out.append(c_ids_m[top])
-                cs_out.append(cos[top])
-            if not qs_out:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(np.concatenate(qs_out), dtype="int64"),
-                    "neighbor_id": pd.Series(np.concatenate(ns_out), dtype="int64"),
-                    "cosine": pd.Series(np.concatenate(cs_out), dtype="float64"),
-                }
-            )
-
-    return emb.select(id_col, vec_col).mapInPandas(search, out_schema)
-
-
 def ivf_probe_search_cached(
     assigned,
     centroids,
@@ -317,14 +203,19 @@ def ivf_probe_search_cached(
 ):
     """IVF probe search over the CACHED assignment index.
 
-    Same probe selection and scoring arithmetic as
-    :func:`ivf_probe_search`, but the per-vector nearest-centroid
-    assignment — ~C/nprobe of that kernel's math — is read from the
-    session-cached index (``assigned``: id, cell, vector) instead of
-    recomputed per invocation. The cell filter is a JVM ``isin`` over
-    the cached blocks, so only probed cells' members cross the Arrow
-    boundary at all: per query invocation the scored row count is
-    nprobe * N / n_cells, the true IVF work shape at any corpus size.
+    Driver side (tiny, exact): collect the centroid and query matrices
+    once; rank all centroids per query with the fixed-point cosine and
+    keep the top ``nprobe`` probe cells (ties by centroid id ascending,
+    matching the SQL oracle's ROW_NUMBER order).
+
+    The per-vector nearest-centroid assignment is read from the
+    session-cached index (``assigned``: id, cell, vector, built by
+    :func:`ivf_assign`) instead of recomputed per invocation. The cell
+    filter is a JVM ``isin`` over the cached blocks, so only probed
+    cells' members cross the Arrow boundary at all: per query invocation
+    the scored row count is nprobe * N / n_cells, the true IVF work
+    shape at any corpus size. Each task emits its local top-k per query;
+    the caller finishes with a global window over the survivors.
     """
     import numpy as np
     import pandas as pd
@@ -476,15 +367,7 @@ def blocked_neardup(
     )
 
 
-# DuckDB oracle fragments (kept adjacent to the Spark implementations).
-# ``elems`` is expected as: SELECT vec_id, label, unnest(embedding) AS e,
-# generate_subscripts(embedding, 1) AS i FROM embeddings.
-SQL_ELEMS = (
-    "SELECT vec_id, label, unnest(embedding) AS e, "
-    "generate_subscripts(embedding, 1) AS i FROM embeddings"
-)
-
-
+# DuckDB oracle fragment (kept adjacent to the Spark implementations).
 def sql_fx_sum(expr: str) -> str:
     """DuckDB sum of floor(expr * 1e12) BIGINTs over a per-row product
     expression: the fixed-point fold the kernels above compute."""

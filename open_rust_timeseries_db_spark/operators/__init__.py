@@ -2,8 +2,7 @@
 
 from open_rust_timeseries_db_spark.operators.asof import asof_join
 from open_rust_timeseries_db_spark.operators.percentiles import (
-    approx_percentiles,
     nearest_rank_percentiles,
 )
 
-__all__ = ["asof_join", "approx_percentiles", "nearest_rank_percentiles"]
+__all__ = ["asof_join", "nearest_rank_percentiles"]

@@ -51,17 +51,6 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # color type -> samples per pixel (8-bit depth, non-interlaced support)
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 
-IMAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("channels", T.LongType()),
-        T.StructField("pixel_sum", T.LongType()),
-        T.StructField("ok", T.BooleanType()),
-    ]
-)
-
 
 def decode_image(payload: bytes) -> "np.ndarray":
     """Decode an 8-bit non-interlaced PNG to (H, W, C) uint8.
@@ -72,14 +61,14 @@ def decode_image(payload: bytes) -> "np.ndarray":
     0 (gray), 2 (RGB), 4 (gray+alpha), 6 (RGBA) at bit depth 8 —
     what an encoder without a palette writes. Anything else (palette,
     16-bit, interlaced, or a non-PNG container like JPEG) raises
-    ``ValueError`` with the reason; the caller's feature extractor
-    surfaces those rows as ok=false instead of failing the job.
+    ``ValueError`` with the reason, so a caller can keep such rows as
+    data instead of failing the job.
 
     Unfiltering is sequential by definition (each scanline references
     the previous), row-vectorized in numpy: Up is one vector add; Sub/
     Average/Paeth walk pixels within the row. Throughput is plenty for
     feature extraction; a cluster with codec wheels can swap this out
-    without touching the Arrow plumbing in :func:`image_features`.
+    without touching its callers.
     """
     import numpy as np
 
@@ -190,54 +179,6 @@ def encode_png(img: "np.ndarray") -> bytes:
         + chunk(b"IDAT", zlib.compress(scan, 6))
         + chunk(b"IEND", b"")
     )
-
-
-def image_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-image features from a PNG ``BinaryType`` column via Arrow
-    ``mapInPandas``: (doc_id, width, height, channels, pixel_sum, ok).
-
-    ``pixel_sum`` (exact integer sum of all samples) stands in for the
-    mean/embedding a real pipeline computes — integer so results are
-    engine- and partition-order-exact. Undecodable payloads yield
-    ok=false with null dims instead of failing the task: at 100 TB
-    corrupt rows are data, not exceptions."""
-
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for batch in batches:
-            out = {k: [] for k in
-                   ("doc_id", "width", "height", "channels", "pixel_sum", "ok")}
-            for doc_id, payload in zip(batch[id_col], batch[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    img = decode_image(bytes(payload) if payload else b"")
-                    out["width"].append(img.shape[1])
-                    out["height"].append(img.shape[0])
-                    out["channels"].append(img.shape[2])
-                    out["pixel_sum"].append(int(img.sum(dtype=np.int64)))
-                    out["ok"].append(True)
-                except (ValueError, zlib.error):
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["channels"].append(None)
-                    out["pixel_sum"].append(None)
-                    out["ok"].append(False)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "width": pd.Series(out["width"], dtype="Int64"),
-                    "height": pd.Series(out["height"], dtype="Int64"),
-                    "channels": pd.Series(out["channels"], dtype="Int64"),
-                    "pixel_sum": pd.Series(out["pixel_sum"], dtype="Int64"),
-                    "ok": pd.Series(out["ok"], dtype="bool"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(extract, IMAGE_SCHEMA)
 
 
 def frame_features(

@@ -1,10 +1,9 @@
-"""Percentile operators: exact nearest-rank (reference semantics) + approx.
+"""Percentile operators: exact nearest-rank (reference semantics).
 
 The reference computes percentiles by sorting all samples in memory and
 indexing at round(p * (n-1)) (reference src/tests/integration_test.rs:
 359-364). ``nearest_rank_percentiles`` reproduces that exactly and
-deterministically; ``approx_percentiles`` is the one-pass sketch
-alternative (t-digest via percentile_approx: mergeable, no exactness).
+deterministically.
 
 Two exact strategies, chosen by a Catalyst size estimate (strategy
 "auto"):
@@ -324,21 +323,6 @@ def _distinct_value_percentiles(
             ).alias(name)
         )
     return cum.agg(*aggs)
-
-
-def approx_percentiles(
-    df: DataFrame,
-    value_col: str,
-    percentiles: list[tuple[str, float]],
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Sketch-based percentiles: single pass, mergeable, cluster-scale."""
-    pcts = F.array(*[F.lit(p) for _, p in percentiles])
-    arr = F.percentile_approx(value_col, pcts, F.lit(accuracy)).alias("__pcts")
-    out = df.agg(arr)
-    return out.select(
-        *[F.element_at("__pcts", i + 1).alias(name) for i, (name, _) in enumerate(percentiles)]
-    )
 
 
 def nearest_rank_percentiles_by(

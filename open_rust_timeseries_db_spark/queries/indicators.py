@@ -418,9 +418,6 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DECILE_CUTS = [(f"c{i}", i / 10.0) for i in range(1, 10)]
-
-
 @query(
     "q_revenue_concentration",
     f"""

@@ -4,9 +4,8 @@ Each runs a genuine Structured Streaming pipeline (file source over the
 sf_dir's events table, availableNow trigger, memory sink) and returns
 the drained result as a batch DataFrame — so the driver's DuckDB oracle
 verifies STREAMING execution bit-for-bit against the batch SQL twin.
-This is the verifiable half of the streaming layer; the rate-source
-demo feed (streaming/sources.market_data_stream) exercises the same
-pipelines live and is covered by tests/test_streaming.py.
+The durable half of the streaming layer, a ``foreachBatch`` append into
+a time layout keyed by batch id, is covered by tests/test_layout.py.
 
 The consumer roles mirrored here are the reference's
 (src/tests/integration_test.rs:221-288): throughput accounting, VWAP

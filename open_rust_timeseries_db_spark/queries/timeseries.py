@@ -36,6 +36,30 @@ _HOUR_US = 3_600_000_000
 _DAY_US = 86_400_000_000
 
 
+def _bar_partials(ticks: DataFrame) -> DataFrame:
+    """Hourly OHLC bars of ``ticks`` (user_id, ts_us, value, event_id)
+    with the ``ord`` partials (min/max ordering keys) that let bars
+    re-aggregate losslessly: the one aggregate behind the materialized
+    build and its incremental refresh."""
+    k = ticks.select(
+        "user_id",
+        F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"),
+        "value",
+        (F.col("ts_us") * 1000 + F.col("event_id") % 1000).alias("ord"),
+    )
+    return k.groupBy("user_id", "bucket_hour").agg(
+        (F.first("bucket_hour") * _HOUR_US).alias("bucket_start_us"),
+        F.min_by("value", "ord").alias("open_v"),
+        F.max("value").alias("high_v"),
+        F.min("value").alias("low_v"),
+        F.max_by("value", "ord").alias("close_v"),
+        F.min_by("ord", "ord").alias("open_ord"),
+        F.max_by("ord", "ord").alias("close_ord"),
+        F.count(F.lit(1)).alias("n_ticks"),
+        dsum("value").alias("volume"),
+    )
+
+
 def ohlc_hourly_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached hourly OHLC bars — the MATERIALIZED continuous
     aggregate both bar queries serve from.
@@ -55,27 +79,9 @@ def ohlc_hourly_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = events_us(spark, sf_dir)
-
-    def build() -> DataFrame:
-        k = ev.select(
-            "user_id",
-            F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"),
-            "value",
-            (F.col("ts_us") * 1000 + F.col("event_id") % 1000).alias("ord"),
-        )
-        return k.groupBy("user_id", "bucket_hour").agg(
-            (F.first("bucket_hour") * _HOUR_US).alias("bucket_start_us"),
-            F.min_by("value", "ord").alias("open_v"),
-            F.max("value").alias("high_v"),
-            F.min("value").alias("low_v"),
-            F.max_by("value", "ord").alias("close_v"),
-            F.min_by("ord", "ord").alias("open_ord"),
-            F.max_by("ord", "ord").alias("close_ord"),
-            F.count(F.lit(1)).alias("n_ticks"),
-            dsum("value").alias("volume"),
-        )
-
-    return _cached_ckpt(ev, build, ("ohlc_hourly",), part_by=("user_id",))
+    return _cached_ckpt(
+        ev, lambda: _bar_partials(ev), ("ohlc_hourly",), part_by=("user_id",)
+    )
 
 
 def ohlc_increment(bars: DataFrame, new_ticks: DataFrame) -> DataFrame:
@@ -84,11 +90,11 @@ def ohlc_increment(bars: DataFrame, new_ticks: DataFrame) -> DataFrame:
     work is proportional to the BATCH, never the history.
 
     ``new_ticks`` carries (user_id, ts_us, value, event_id). The batch
-    aggregates to bar partials with the same expressions as the full
-    build (one shuffle of batch-size rows); existing bars split into
-    touched (left-semi on the delta's bar keys) and untouched
-    (left-anti) — only touched bars re-enter aggregation, merged with
-    the delta through the carried partials: open/close via
+    aggregates to bar partials through the full build's own
+    :func:`_bar_partials` (one shuffle of batch-size rows); existing
+    bars split into touched (left-semi on the delta's bar keys) and
+    untouched (left-anti) — only touched bars re-enter aggregation,
+    merged with the delta through the carried partials: open/close via
     min_by/max_by on the ord partials (exact under ties because ord is
     a total order), high/low/n_ticks by plain max/min/sum, volume
     through the fixed-point dsum fold (order-insensitive, so merge
@@ -102,26 +108,7 @@ def ohlc_increment(bars: DataFrame, new_ticks: DataFrame) -> DataFrame:
     equal the full rebuild row-for-row including ord partials
     (tests/test_continuous_aggregate.py).
     """
-    delta = (
-        new_ticks.select(
-            "user_id",
-            F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"),
-            "value",
-            (F.col("ts_us") * 1000 + F.col("event_id") % 1000).alias("ord"),
-        )
-        .groupBy("user_id", "bucket_hour")
-        .agg(
-            (F.first("bucket_hour") * _HOUR_US).alias("bucket_start_us"),
-            F.min_by("value", "ord").alias("open_v"),
-            F.max("value").alias("high_v"),
-            F.min("value").alias("low_v"),
-            F.max_by("value", "ord").alias("close_v"),
-            F.min_by("ord", "ord").alias("open_ord"),
-            F.max_by("ord", "ord").alias("close_ord"),
-            F.count(F.lit(1)).alias("n_ticks"),
-            dsum("value").alias("volume"),
-        )
-    )
+    delta = _bar_partials(new_ticks)
     keys = ["user_id", "bucket_hour"]
     touched = bars.join(delta.select(*keys), keys, "left_semi")
     untouched = bars.join(delta.select(*keys), keys, "left_anti")

@@ -124,8 +124,6 @@ TABLES: dict[str, T.StructType] = {
     ),
 }
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 
 def _ensure_read_confs(spark: SparkSession) -> None:
     """The driver may hand us a vanilla session; reads depend on these.
@@ -276,8 +274,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark, os.path.abspath(sf_dir), session_cache.TABLE, name, build=build
     )
 
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register each table as a temp view for spark.sql access."""
-    for name in names or list(TABLES):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

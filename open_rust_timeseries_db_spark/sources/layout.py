@@ -19,13 +19,14 @@ what makes its query half viable. Three facts drive this module:
    job on every read. Appends must match that schema.
 
 3. **Streaming ingest produces small files forever.** Each micro-batch
-   commit (streaming/run.foreach_batch_parquet) lands one file per
-   state partition per trigger; a month of that is millions of tiny
-   files and a scheduler-bound scan. Compaction is therefore a
-   first-class maintenance operator, not an afterthought: it appends
-   each chunk's rows into a scratch directory through the same writer
-   as an append, ~target-size and sorted, and swaps the result in
-   atomically per chunk, so readers never see a half-compacted chunk.
+   commit (a ``foreachBatch`` call of :func:`append_time_layout` with
+   its batch id) lands new files in every chunk it reaches; a month of
+   that is millions of tiny files and a scheduler-bound scan.
+   Compaction is therefore a first-class maintenance operator, not an
+   afterthought: it appends each chunk's rows into a scratch directory
+   through the same writer as an append, ~target-size and sorted, and
+   swaps the result in atomically per chunk, so readers never see a
+   half-compacted chunk.
    Every write has one Spark path (:func:`_chunked_writer`, the only
    place the chunk column and the sort order are built) and, for small
    time-layout inputs that :func:`_driver_rows` admits, one driver path
@@ -56,7 +57,7 @@ from open_rust_timeseries_db_spark.session import scratch_path
 
 _MANIFEST = "_time_layout.json"
 _CHUNK_COL = "chunk_us"
-_COMMITTED = "committed_ingest_id"  # the highest ingest_id compacted
+_COMMITTED = "committed_ingest_id"  # highest ingest_id compacted or dropped
 
 DAY_US = 86_400_000_000
 HOUR_US = 3_600_000_000
@@ -315,10 +316,9 @@ def read_manifest(path: str) -> dict:
         return json.load(f)
 
 
-def _declared_schema(man: dict) -> T.StructType | None:
-    """The data schema the manifest declares (no chunk column), or None
-    for a manifest written before layouts recorded it."""
-    return T.StructType.fromJson(man["schema"]) if "schema" in man else None
+def _declared_schema(man: dict) -> T.StructType:
+    """The data schema the manifest declares (no chunk column)."""
+    return T.StructType.fromJson(man["schema"])
 
 
 def _chunk_dirs(path: str):
@@ -354,7 +354,7 @@ def _scan_files(df: DataFrame) -> list[str] | None:
     return [unquote(u.path) for u in urls]
 
 
-def _driver_rows(paths: list[str] | None, man: dict, schema: T.StructType | None):
+def _driver_rows(paths: list[str] | None, man: dict, schema: T.StructType):
     """The rows of the parquet files at ``paths`` as one Arrow table with
     the Arrow types ``schema`` maps to, or None when a Spark job must
     rewrite them: the one driver/Spark gate of appends and compaction.
@@ -372,7 +372,6 @@ def _driver_rows(paths: list[str] | None, man: dict, schema: T.StructType | None
     if (
         not paths
         or man.get("order")
-        or schema is None
         or sum(os.path.getsize(p) for p in paths) >= _DRIVER_MAX_BYTES
     ):
         return None
@@ -442,23 +441,24 @@ def append_time_layout(
     appear as needed; existing chunks gain files, which is what
     :func:`compact_chunks` exists to fold back in.
 
-    ``ingest_id`` (streaming) is the stream's monotonic batch id; a
-    replayed id must carry the same rows. The batch stages to a scratch
-    directory; only after the whole write succeeds does each chunk lose
-    its files of that id and gain the staged ones, renamed
-    ``ingest-<id>-<seq>.parquet``. A micro-batch REPLAYED after a crash
-    thus replaces its own (possibly partial) output instead of adding a
-    copy, and a crash mid-replay keeps the committed one: the
-    exactly-once-per-batch-id contract of
-    streaming/run.write_batch_idempotent. The id lives in file names
-    because partition discovery needs every data file at one depth; the
-    rename is the local-FS stand-in for a table format's snapshot
-    commit. :func:`compact_chunks` renames those files away, so it
-    records the highest id it rewrote in the manifest
-    (``committed_ingest_id``), and an append of an id at or below it is
-    a no-op. A batch a crash left partial must be replayed before the
-    next compaction, as a restarted stream does. Batch appends
-    (``None``) write plain files straight into the chunk directories.
+    ``ingest_id`` (streaming) is the stream's monotonic batch id: call
+    ``append_time_layout(batch_df, path, ingest_id=batch_id)`` from
+    ``foreachBatch``. A replayed id must carry the same rows. The batch
+    stages to a scratch directory; only after the whole write succeeds
+    does each chunk lose its files of that id and gain the staged ones,
+    renamed ``ingest-<id>-<seq>.parquet``. A micro-batch REPLAYED after
+    a crash thus replaces its own (possibly partial) output instead of
+    adding a copy, and a crash mid-replay keeps the committed one: the
+    engine's one exactly-once-per-batch-id sink. The id lives in file
+    names because partition discovery needs every data file at one
+    depth; the rename is the local-FS stand-in for a table format's
+    snapshot commit. :func:`compact_chunks` renames those files away and
+    :func:`drop_chunks_before` deletes them, so both record the highest
+    id they remove in the manifest (``committed_ingest_id``), and an
+    append of an id at or below it is a no-op. A batch a crash left
+    partial must be replayed before the next compaction or retention,
+    as a restarted stream does. Batch appends (``None``) write plain
+    files straight into the chunk directories.
 
     **Driver path.** When ``df`` is a plain scan of local parquet files
     (``spark.read.parquet(...)``, nothing on top), its files go through
@@ -478,16 +478,15 @@ def append_time_layout(
     """
     man = read_manifest(path)
     if ingest_id is not None and ingest_id <= man.get(_COMMITTED, -1):
-        return  # a replay of a batch that a compaction already rewrote
+        return  # a replay of a batch that maintenance already removed
     declared = _declared_schema(man)
-    if declared is not None:
-        want = {f.name: f.dataType for f in declared}
-        got = {f.name: f.dataType for f in _nullable_schema(df)}
-        if got != want:
-            raise ValueError(
-                f"append_time_layout: frame schema {df.schema.simpleString()}"
-                f" differs from the layout's {declared.simpleString()}"
-            )
+    want = {f.name: f.dataType for f in declared}
+    got = {f.name: f.dataType for f in _nullable_schema(df)}
+    if got != want:
+        raise ValueError(
+            f"append_time_layout: frame schema {df.schema.simpleString()}"
+            f" differs from the layout's {declared.simpleString()}"
+        )
     rows = _driver_rows(_scan_files(df), man, df.schema)
     if rows is not None:
         write = functools.partial(_write_chunk_files, rows, man, df.schema)
@@ -528,40 +527,11 @@ def append_time_layout(
         shutil.rmtree(scratch, ignore_errors=True)
 
 
-def stream_into_time_layout(
-    stream: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    n_range_partitions: int | None = None,
-):
-    """Streaming ingest into a chunked layout: each micro-batch appends
-    via :func:`append_time_layout` keyed on its batch id (replay-safe),
-    landing time-chunked and grid-sorted from the first file. The
-    compaction cycle (:func:`compact_chunks`) folds the per-trigger
-    small files into target-size sorted files chunk-atomically — the
-    ingest composition a tick archive actually runs. Returns the
-    started StreamingQuery.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        append_time_layout(
-            batch_df, path, n_range_partitions, ingest_id=batch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def read_layout(spark: SparkSession, path: str) -> DataFrame:
     """The whole layout at ``path`` as a Spark scan, ``chunk_us``
     partition column included, read with the manifest's declared schema
     so no schema-inference job runs."""
     schema = _declared_schema(read_manifest(path))
-    if schema is None:
-        return spark.read.parquet(path)
     chunk = T.StructField(_CHUNK_COL, T.LongType())
     return spark.read.schema(T.StructType([*schema.fields, chunk])).parquet(path)
 
@@ -657,6 +627,21 @@ def chunk_file_stats(path: str) -> dict[str, dict]:
     return stats
 
 
+def _commit_ingest_ids(path: str, man: dict, entries: list[str]) -> None:
+    """Raise the manifest's ``committed_ingest_id`` to the highest
+    ``ingest-<id>-`` file in the chunk directories ``entries``, before
+    maintenance removes or renames those files (see
+    :func:`append_time_layout`)."""
+    ids = [
+        int(f.name.split("-")[1])
+        for entry in entries
+        for f in _data_files(os.path.join(path, entry))
+        if f.name.startswith("ingest-")
+    ]
+    if max(ids, default=-1) > man.get(_COMMITTED, -1):
+        _write_manifest(path, {**man, _COMMITTED: max(ids)})
+
+
 def drop_chunks_before(path: str, cutoff_us: int) -> list[str]:
     """Retention: delete every chunk strictly OLDER than ``cutoff_us``.
 
@@ -667,17 +652,22 @@ def drop_chunks_before(path: str, cutoff_us: int) -> list[str]:
     row ages out). The null-ts chunk has no interval and is never
     dropped. This is the hypertable `drop_chunks` pattern: data
     expiry as O(#chunks) directory deletes, never a rewrite — the only
-    affordable way to expire data from a 100 TB archive. The manifest
-    is untouched (layout geometry survives an empty table). Returns
-    the chunk dirs removed.
+    affordable way to expire data from a 100 TB archive. The layout
+    geometry in the manifest survives an empty table; only its
+    ``committed_ingest_id`` rises to the highest batch id among the
+    dropped files, so a replay of such a batch is a no-op instead of
+    bringing its expired rows back. Returns the chunk dirs removed.
     """
     man = read_manifest(path)
     chunk_us = man["chunk_us"]
-    dropped: list[str] = []
-    for entry, chunk in _chunk_dirs(path):
-        if chunk is not None and chunk + chunk_us <= cutoff_us:
-            shutil.rmtree(os.path.join(path, entry))
-            dropped.append(entry)
+    dropped = [
+        entry
+        for entry, chunk in _chunk_dirs(path)
+        if chunk is not None and chunk + chunk_us <= cutoff_us
+    ]
+    _commit_ingest_ids(path, man, dropped)
+    for entry in dropped:
+        shutil.rmtree(os.path.join(path, entry))
     return dropped
 
 
@@ -742,8 +732,8 @@ def compact_chunks(
             if rows is not None:
                 _write_chunk_files(rows, man, schema, scratch, n_out)
             else:
-                reader = spark.read if schema is None else spark.read.schema(schema)
-                writer = _chunked_writer(reader.parquet(full), man, n_out)
+                scan = spark.read.schema(schema).parquet(full)
+                writer = _chunked_writer(scan, man, n_out)
                 writer.mode("append").parquet(scratch)
             others = [e for e, _ in _chunk_dirs(scratch) if e != entry]
             if others:
@@ -771,14 +761,7 @@ def compact_chunks(
         return {}
     # Record the batches about to be renamed away before renaming them:
     # their output is in the layout either way.
-    ids = [
-        int(f.name.split("-")[1])
-        for entry, _ in todo
-        for f in _data_files(os.path.join(path, entry))
-        if f.name.startswith("ingest-")
-    ]
-    if max(ids, default=-1) > man.get(_COMMITTED, -1):
-        _write_manifest(path, {**man, _COMMITTED: max(ids)})
+    _commit_ingest_ids(path, man, [entry for entry, _ in todo])
     done: dict[str, tuple[int, int]] = {}
     # FIFO scheduling back-fills naturally; 8 in flight is enough to
     # hide each job's scheduling floor without thrashing the scheduler.

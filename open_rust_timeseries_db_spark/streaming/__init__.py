@@ -6,8 +6,8 @@ Mapping of the reference's moving parts (all citations into
 
 - producer threads pushing into per-field rings
   (src/main.rs:42-70, src/storage/table.rs:54-80)
-  -> a streaming source: rate source for live demos,
-     file source over the testdata parquet for verifiable runs;
+  -> a streaming source: a file source over the testdata parquet,
+     so every run is verifiable;
 - ring capacity / reject-new overflow (src/memory/
   low_latency_mpmc_ring.rs:85-86, README.md:16)
   -> source admission control: maxOffsetsPerTrigger /
@@ -28,14 +28,10 @@ from open_rust_timeseries_db_spark.streaming.pipelines import (
     windowed_throughput,
 )
 from open_rust_timeseries_db_spark.streaming.run import run_available_now_to_memory
-from open_rust_timeseries_db_spark.streaming.sources import (
-    events_file_stream,
-    market_data_stream,
-)
+from open_rust_timeseries_db_spark.streaming.sources import events_file_stream
 
 __all__ = [
     "events_file_stream",
-    "market_data_stream",
     "run_available_now_to_memory",
     "running_vwap",
     "stream_dedup",

@@ -1,15 +1,17 @@
-"""Streaming execution helpers: sinks and bounded-drain runners.
+"""Streaming execution helper: the bounded-drain runner.
 
 The reference's consumers run until a message quota is hit
 (src/tests/integration_test.rs:219-221); the verifiable analog here is
-``availableNow`` — drain everything the source currently has, commit,
-stop. Sinks:
+``availableNow``: drain everything the source currently has, commit,
+stop. :func:`run_available_now_to_memory` drains into a memory sink
+for the oracle-checked streaming queries.
 
-- memory sink (:func:`run_available_now_to_memory`) for tests/oracles;
-- parquet-per-batch (:func:`foreach_batch_parquet`) as the durable
-  sink: each micro-batch commits atomically, upgrading the reference's
-  torn-write hazard (src/storage/table.rs:61-76 can fail halfway) to
-  per-batch exactly-once.
+The durable sink is the time layout: in ``foreachBatch``,
+``sources/layout.append_time_layout(batch_df, path,
+ingest_id=batch_id)`` commits each micro-batch atomically and makes a
+replay of its batch id a no-op. That upgrades the reference's
+torn-write hazard (src/storage/table.rs:61-76 can fail halfway) to
+per-batch exactly-once.
 """
 
 from __future__ import annotations
@@ -40,7 +42,8 @@ def run_available_now_to_memory(
 
     The memory sink is driver-local — strictly a test/verification
     sink (bounded output only: aggregates or small key sets). Durable
-    pipelines use :func:`foreach_batch_parquet`.
+    pipelines append each batch to a time layout instead (module
+    docstring).
 
     The checkpoint (``session.scratch_path``) is removed after the
     drain: safe only because the memory sink is ephemeral too. A
@@ -122,52 +125,3 @@ def run_available_now_to_memory(
     out = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
     return out
-
-
-def foreach_batch_parquet(
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    partition_by: list[str] | None = None,
-):
-    """Durable sink: write each micro-batch to a parquet dataset,
-    idempotently per batch id.
-
-    ``foreachBatch`` alone is at-least-once: after a crash, Structured
-    Streaming replays the last uncommitted micro-batch with the SAME
-    batch_id, so a plain append would duplicate its rows. We make the
-    replay idempotent by keying the write on the batch id: each batch
-    lands in ``out_dir/batch_id=<id>/`` with mode("overwrite"), so a
-    replayed batch overwrites its own partial output instead of
-    appending a second copy. Readers see the union via partition
-    discovery on ``batch_id`` (read out_dir as usual; the extra column
-    is droppable). Returns the started StreamingQuery.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(batch_df, batch_id, out_dir, partition_by)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def write_batch_idempotent(
-    batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
-    partition_by: list[str] | None = None,
-) -> None:
-    """Write one micro-batch into ``out_dir/batch_id=<id>/``, replay-safe.
-
-    Overwrite-into-own-directory = exactly-once per batch id: a replayed
-    batch overwrites its own (possibly partial) prior output instead of
-    appending a second copy; the batch writer's commit protocol makes
-    each directory's contents atomic (_SUCCESS-gated).
-    """
-    writer = batch_df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(f"{out_dir}/batch_id={batch_id}")

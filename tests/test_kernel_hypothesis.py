@@ -1,4 +1,6 @@
-"""Hypothesis-driven batch-split fuzz of the Arrow text kernels.
+"""Hypothesis-driven batch-split fuzz of the Arrow text kernels the
+registered queries run: the fused doc-gram and shingle-profile kernels
+(every corpus cache build runs both), winnowing and SimHash.
 
 The kernels' risk surface is batch-level vectorization with positional
 document-boundary masking; the fixed adversarial corpus in
@@ -17,6 +19,8 @@ from collections import Counter
 import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
+
+from open_rust_timeseries_db_spark.functions.text_kernels import MH_AB, MH_P
 
 TOKENS = ["a", "b", "ab", "tok", "x1", "zz", "é"]
 _text = st.lists(st.sampled_from(TOKENS), max_size=12).map(" ".join)
@@ -79,9 +83,12 @@ def gens(spark):
         dummy = spark.createDataFrame([(0, "x")], "doc_id long, text string")
         out = {}
         for name, fn in [
-            ("shingle", tk.shingle_hashes_pd),
-            ("doc_bigram", tk.doc_bigram_counts_pd),
-            ("partial", tk.bigram_partial_counts_pd),
+            # As shingle_profile_ckpt builds it: every MinHash permutation.
+            (
+                "profile",
+                lambda df: tk.shingle_profile_pd(df, n_perms=len(MH_AB)),
+            ),
+            ("doc_gram", tk.doc_gram_counts_pd),
             ("winnow", tk.winnow_fp_pd),
             ("simhash", tk.simhash_signatures_pd),
         ]:
@@ -92,23 +99,32 @@ def gens(spark):
     return out
 
 
+def _shingles(t, n=3):
+    toks = _toks(t)
+    return {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
+
+
+def _naive_minhash(t):
+    base = [
+        int(hashlib.md5(sh.encode()).hexdigest()[:8], 16) for sh in _shingles(t)
+    ]
+    return [min((a * h + b) % MH_P for h in base) for a, b in MH_AB]
+
+
 @settings(max_examples=50, deadline=None)
 @given(corpus_and_splits())
 def test_shingle_cardinality_and_dup_sets(gens, case):
     texts, cuts = case
-    naive = {
-        i: {
-            " ".join(_toks(t)[j : j + 3])
-            for j in range(max(0, len(_toks(t)) - 2))
-        }
-        for i, t in enumerate(texts)
-    }
-    out = _run(gens["shingle"], texts, cuts)
+    naive = {i: _shingles(t) for i, t in enumerate(texts)}
+    out = _run(gens["profile"], texts, cuts)
     by_doc: dict[int, set] = {}
     if out is not None:
         for r in out.itertuples():
-            by_doc.setdefault(int(r.id), set()).add(int(r.hs))
-            assert int(r.n_sh) == len(naive[int(r.id)])
+            i = int(r.id)
+            assert i not in by_doc  # one profile row per document
+            by_doc[i] = {int(h) for h in r.hs}
+            assert int(r.n_sh) == len(naive[i]) == len(r.hs)
+            assert [int(x) for x in r.sigs] == _naive_minhash(texts[i])
     for i, sh in naive.items():
         assert len(by_doc.get(i, set())) == len(sh)
     # Equal token sequences must produce identical shingle-id sets
@@ -117,6 +133,31 @@ def test_shingle_cardinality_and_dup_sets(gens, case):
         for j, u in enumerate(texts):
             if _toks(t) == _toks(u):
                 assert by_doc.get(i, set()) == by_doc.get(j, set())
+
+
+def _doc_grams(gens, texts, cuts, kind):
+    """The doc-gram kernel's (id, gram) -> n rows of one ``kind`` (1 =
+    token, 2 = bigram)."""
+    out = _run(gens["doc_gram"], texts, cuts)
+    if out is None:
+        return {}
+    return {
+        (int(r.id), r.gram): int(r.n)
+        for r in out.itertuples()
+        if r.kind == kind
+    }
+
+
+@settings(max_examples=50, deadline=None)
+@given(corpus_and_splits())
+def test_doc_token_counts_match_naive(gens, case):
+    texts, cuts = case
+    expected = {
+        (i, tok): n
+        for i, t in enumerate(texts)
+        for tok, n in Counter(_toks(t)).items()
+    }
+    assert _doc_grams(gens, texts, cuts, 1) == expected
 
 
 @settings(max_examples=50, deadline=None)
@@ -128,30 +169,23 @@ def test_doc_bigram_counts_match_naive(gens, case):
         for i, t in enumerate(texts)
         for (a, b), n in Counter(zip(_toks(t), _toks(t)[1:])).items()
     }
-    out = _run(gens["doc_bigram"], texts, cuts)
-    got = (
-        {(int(r.id), r.bigram): int(r.n) for r in out.itertuples()}
-        if out is not None
-        else {}
-    )
-    assert got == expected
+    assert _doc_grams(gens, texts, cuts, 2) == expected
 
 
 @settings(max_examples=50, deadline=None)
 @given(corpus_and_splits())
 def test_corpus_bigram_partials_sum_to_naive(gens, case):
+    """Summed over documents, the bigram rows are the corpus counts
+    that bigram_counts_ckpt rolls up."""
     texts, cuts = case
     expected = Counter()
     for t in texts:
         toks = _toks(t)
         expected.update(f"{a} {b}" for a, b in zip(toks, toks[1:]))
     got = Counter()
-    out = _run(gens["partial"], texts, cuts)
-    if out is not None:
-        for r in out.itertuples():
-            got[r.bigram] += int(r.n_bigram)
-            assert r.w1 == r.bigram.split(" ", 1)[0]
-    assert got == +expected
+    for (_, gram), n in _doc_grams(gens, texts, cuts, 2).items():
+        got[gram] += n
+    assert got == expected
 
 
 def _naive_winnow(t, n=3, w=4):

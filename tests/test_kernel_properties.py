@@ -17,9 +17,10 @@ from collections import Counter
 import pytest
 
 from open_rust_timeseries_db_spark.functions.text_kernels import (
-    bigram_partial_counts_pd,
-    doc_bigram_counts_pd,
-    shingle_hashes_pd,
+    MH_AB,
+    MH_P,
+    doc_gram_counts_pd,
+    shingle_profile_pd,
     winnow_fp_pd,
 )
 
@@ -52,20 +53,35 @@ def _naive_bigrams(doc: str) -> list[str]:
     return [f"{a} {b}" for a, b in zip(toks, toks[1:])]
 
 
+def _doc_grams(df, kind: int) -> dict[tuple[int, str], int]:
+    """The fused kernel's (id, gram) -> n rows of one ``kind`` (1 =
+    token, 2 = bigram)."""
+    return {
+        (r["id"], r["gram"]): r["n"]
+        for r in doc_gram_counts_pd(df).collect()
+        if r["kind"] == kind
+    }
+
+
+def _corpus_counts(per_doc: dict[tuple[int, str], int]) -> Counter:
+    got = Counter()
+    for (_, gram), n in per_doc.items():
+        got[gram] += n
+    return got
+
+
 @pytest.fixture(scope="module")
 def docs_df(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
 
 
 def test_corpus_bigram_partials_sum_to_naive_counts(docs_df):
+    """Summed over documents, the per-document bigram rows are the
+    corpus counts that bigram_counts_ckpt rolls up."""
     expected = Counter()
     for _, text in DOCS:
         expected.update(_naive_bigrams(text))
-    got = Counter()
-    for r in bigram_partial_counts_pd(docs_df).collect():
-        got[r["bigram"]] += r["n_bigram"]
-        assert r["w1"] == r["bigram"].split(" ", 1)[0]
-    assert got == expected
+    assert _corpus_counts(_doc_grams(docs_df, 2)) == expected
 
 
 def test_per_doc_bigram_counts_match_naive(docs_df):
@@ -74,29 +90,47 @@ def test_per_doc_bigram_counts_match_naive(docs_df):
         for doc_id, text in DOCS
         for bg, n in Counter(_naive_bigrams(text)).items()
     }
-    got = {
-        (r["id"], r["bigram"]): r["n"]
-        for r in doc_bigram_counts_pd(docs_df).collect()
+    assert _doc_grams(docs_df, 2) == expected
+
+
+def test_per_doc_token_counts_match_naive(docs_df):
+    expected = {
+        (doc_id, tok): n
+        for doc_id, text in DOCS
+        for tok, n in Counter(_toks(text)).items()
     }
-    assert got == expected
+    assert _doc_grams(docs_df, 1) == expected
+
+
+def _shingles(text: str, n: int = 3) -> set[str]:
+    toks = _toks(text)
+    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _naive_minhash(text: str) -> list[int]:
+    """The q_minhash_jaccard oracle's signature: per (A, B), the min of
+    (A * h + B) mod (2^61 - 1) over the doc's shingles, h = the first 8
+    hex chars of the shingle's md5."""
+    base = [
+        int(hashlib.md5(sh.encode()).hexdigest()[:8], 16)
+        for sh in _shingles(text)
+    ]
+    return [min((a * h + b) % MH_P for h in base) for a, b in MH_AB]
 
 
 def test_shingle_kernel_cardinalities_and_dup_equality(docs_df):
-    """hs values are internal (engine-side sip-hash), so the contract
-    is: n_sh equals the naive distinct-3-gram count, every row of one
-    doc repeats that count, and exact-duplicate documents produce
-    exactly equal hs SETS (the property every downstream dedup join
-    relies on)."""
-    naive = {
-        doc_id: len({" ".join(_toks(t)[i : i + 3])
-                     for i in range(max(0, len(_toks(t)) - 2))})
-        for doc_id, t in DOCS
-    }
-    rows = shingle_hashes_pd(docs_df).collect()
+    """hs values are internal (md5-derived join keys), so the contract
+    is: n_sh equals the naive distinct-3-gram count, hs holds that many
+    distinct ids, and exact-duplicate documents produce exactly equal hs
+    SETS (the property every downstream dedup join relies on). The
+    MinHash signatures, which the oracle sees, are exact."""
+    naive = {doc_id: len(_shingles(t)) for doc_id, t in DOCS}
     by_doc: dict[int, set] = {}
-    for r in rows:
-        by_doc.setdefault(r["id"], set()).add(r["hs"])
-        assert r["n_sh"] == naive[r["id"]]
+    for r in shingle_profile_pd(docs_df, n_perms=len(MH_AB)).collect():
+        assert r["id"] not in by_doc  # one profile row per document
+        by_doc[r["id"]] = set(r["hs"])
+        assert r["n_sh"] == naive[r["id"]] == len(r["hs"])
+        assert list(r["sigs"]) == _naive_minhash(DOCS[r["id"]][1])
     for doc_id, t in DOCS:
         expected_n = naive[doc_id]
         if expected_n == 0:
@@ -146,21 +180,15 @@ def test_bigram_boundary_masking_with_many_docs_per_batch(spark):
     expected = Counter()
     for _, text in big:
         expected.update(_naive_bigrams(text))
-    got = Counter()
-    for r in bigram_partial_counts_pd(df).collect():
-        got[r["bigram"]] += r["n_bigram"]
-    assert got == expected
-    # Per-doc twin on the same corpus: row-exact.
+    per_doc = _doc_grams(df, 2)
+    assert _corpus_counts(per_doc) == expected
+    # Per document on the same corpus: row-exact.
     expected_pd = {
         (doc_id, bg): n
         for doc_id, text in big
         for bg, n in Counter(_naive_bigrams(text)).items()
     }
-    got_pd = {
-        (r["id"], r["bigram"]): r["n"]
-        for r in doc_bigram_counts_pd(df).collect()
-    }
-    assert got_pd == expected_pd
+    assert per_doc == expected_pd
 
 
 def test_null_text_rows_tokenize_to_nothing(spark):
@@ -169,7 +197,6 @@ def test_null_text_rows_tokenize_to_nothing(spark):
     EVERY Arrow kernel — no AttributeError, no phantom tokens (round-5
     advice: the fused doc_gram kernel newly crashed on None)."""
     from open_rust_timeseries_db_spark.functions.text_kernels import (
-        doc_gram_counts_pd,
         simhash_signatures_pd,
     )
 
@@ -183,15 +210,14 @@ def test_null_text_rows_tokenize_to_nothing(spark):
     bi = {(r["id"], r["gram"]) for r in grams if r["kind"] == 2}
     assert (1, "a b") in bi and (3, "a b") in bi
 
-    # The shingle / winnow / bigram-partial kernels share _toks: a
+    # The shingle / winnow / doc-gram kernels share _toks: a
     # NULL-only corpus yields zero rows everywhere, not a crash.
     nulls = spark.createDataFrame(
         [(7, None)], "doc_id long, text string"
     )
-    assert shingle_hashes_pd(nulls).count() == 0
+    assert shingle_profile_pd(nulls, n_perms=16).count() == 0
     assert winnow_fp_pd(nulls).count() == 0
-    assert bigram_partial_counts_pd(nulls).count() == 0
-    assert doc_bigram_counts_pd(nulls).count() == 0
+    assert doc_gram_counts_pd(nulls).count() == 0
     # SimHash emits one signature row per doc with >=1 token: a NULL
     # doc has none, so no row (same as empty text).
     assert simhash_signatures_pd(nulls).count() == 0

@@ -451,15 +451,10 @@ class TestAppendAndStreamingIngest:
     def test_streaming_ingest_replay_idempotent_and_compactable(
         self, spark, tmp_path
     ):
-        from open_rust_timeseries_db_spark.sources.layout import (
-            append_time_layout,
-            chunk_file_stats,
-            compact_chunks,
-            read_time_range,
-            stream_into_time_layout,
-            write_time_layout,
-        )
-
+        """A stream appends each micro-batch from ``foreachBatch`` keyed
+        by its batch id. Replaying a committed batch id with its rows,
+        before and after a compaction, leaves the layout's rows as they
+        were."""
         ev = events_us(spark, SF_DIR).select(
             "event_id", "user_id", "ts_us", "value"
         )
@@ -471,41 +466,49 @@ class TestAppendAndStreamingIngest:
         write_time_layout(seed, path, ts_col="ts_us")
         src_dir = str(tmp_path / "src")
         rest.repartition(3).write.parquet(src_dir)
-        stream = (
+        batches: dict[int, list] = {}
+
+        def sink(batch_df, batch_id):
+            batches[batch_id] = batch_df.collect()
+            append_time_layout(
+                batch_df, path, n_range_partitions=2, ingest_id=batch_id
+            )
+
+        q = (
             spark.readStream.schema(rest.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
-        )
-        q = stream_into_time_layout(
-            stream, path, str(tmp_path / "ckpt"), n_range_partitions=2
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
         )
         q.processAllAvailable()
         q.stop()
+        assert sorted(batches) == [0, 1, 2]
 
         def full_read():
-            return {
+            return sorted(
                 tuple(r)
                 for r in read_time_range(spark, path).select(
                     "event_id", "user_id", "ts_us", "value"
                 ).collect()
-            }
+            )
 
-        want = {tuple(r) for r in ev.collect()}
+        want = sorted(tuple(r) for r in ev.collect())
         assert full_read() == want
 
-        # Replay a batch id that already committed: dynamic partition
-        # overwrite must replace its own output, not append a copy.
-        replay = rest.limit(50)
+        # A crash replays batch 0 with the same rows: its ingest-0-
+        # files are replaced, not added to.
+        replay = spark.createDataFrame(batches[0], rest.schema)
         append_time_layout(replay, path, ingest_id=0)
-        append_time_layout(replay, path, ingest_id=0)
-        n_after_replay = read_time_range(spark, path).count()
+        assert full_read() == want
 
-        # Compaction folds the per-trigger files (and the ingest
-        # partition level) away; reads stay correct.
+        # Compaction renames the ingest files away; the replay after it
+        # is a no-op, and every chunk is down to one file.
         compact_chunks(spark, path, target_file_bytes=8 << 20)
-        st = chunk_file_stats(path)
-        assert all("/" not in next(iter(st)) for _ in [0])
-        assert read_time_range(spark, path).count() == n_after_replay
+        append_time_layout(replay, path, ingest_id=0)
+        assert full_read() == want
+        assert {st["n_files"] for st in chunk_file_stats(path).values()} == {1}
 
 
 def test_replay_staging_failure_keeps_committed_batch(spark, tmp_path):
@@ -583,6 +586,22 @@ def test_replay_after_compaction_is_a_no_op(spark, tmp_path):
     # A later batch id still appends.
     append_time_layout(batch, path, ingest_id=8)
     assert read_time_range(spark, path).count() == 20
+
+
+def test_replay_after_retention_is_a_no_op(spark, tmp_path):
+    """A replay re-sends the whole batch, so one that came after
+    retention dropped a chunk of it wrote the chunk back with the
+    batch's expired rows. Retention raises ``committed_ingest_id``
+    over the batches it drops, which makes that replay a no-op."""
+    rows = [(i, 0, 100 * i, float(i)) for i in range(4)]
+    ev = spark.createDataFrame(rows, "event_id long, user_id long, ts_us long, value double")
+    path = str(tmp_path / "retained")
+    write_time_layout(ev.limit(0), path, ts_col="ts_us", chunk_us=200)
+    append_time_layout(ev, path, ingest_id=3)
+    assert drop_chunks_before(path, 200) == ["chunk_us=0"]
+    append_time_layout(ev, path, ingest_id=3)
+    got = read_time_range(spark, path).orderBy("event_id").collect()
+    assert [tuple(r) for r in got] == rows[2:]
 
 
 def test_retention_drops_only_fully_expired_chunks(spark, tmp_path):

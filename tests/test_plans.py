@@ -116,10 +116,10 @@ def test_python_confined_to_designated_operators(spark, qs):
         "q_dedup_clusters",
         "q_contamination",
         "q_winnowing_fp",
-        # bigram LM counts moved to the Arrow partial-count kernel
-        # (bigram_partial_counts_pd): the JVM HOF chain shuffled one
-        # row per bigram occurrence; the kernel ships per-batch
-        # vocabulary-sized partials instead.
+        # bigram LM counts roll up the fused doc-gram Arrow kernel's
+        # per-document bigram rows (doc_gram_counts_pd): the JVM HOF
+        # chain shuffled one row per bigram occurrence; the rollup
+        # ships per-document counts instead.
         "q_ngram_lm_bigrams",
         # per-doc bigram kernel consumers:
         "q_lm_score",

@@ -2,8 +2,7 @@
 
 Covers every scanline filter type (forward-filtering reimplemented
 here independently, straight from the PNG spec §9), the four supported
-color types, malformed-input rejection, and the Arrow image_features
-operator end to end (good + corrupt payloads in one batch).
+color types and malformed-input rejection.
 """
 
 from __future__ import annotations
@@ -18,7 +17,6 @@ from open_rust_timeseries_db_spark.operators.multimodal import (
     _PNG_SIG,
     decode_image,
     encode_png,
-    image_features,
 )
 
 
@@ -117,22 +115,6 @@ def test_truncated_chunks_raise_valueerror_not_struct_error():
            + b"fmt " + struct.pack("<I", len(body)) + body)
     with pytest.raises(ValueError, match="truncated fmt"):
         decode_audio(wav)
-
-
-def test_image_features_operator(spark):
-    good = _rng_img(5, 7, 3, seed=3)
-    rows = [
-        (1, bytearray(encode_png(good))),
-        (2, bytearray(b"garbage bytes, not an image")),
-        (3, bytearray(encode_png(_rng_img(2, 2, 1, seed=9)))),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = {r["doc_id"]: r for r in image_features(df).collect()}
-    assert out[1]["ok"] and (out[1]["width"], out[1]["height"]) == (7, 5)
-    assert out[1]["pixel_sum"] == int(good.sum(dtype=np.int64))
-    assert out[1]["channels"] == 3
-    assert not out[2]["ok"] and out[2]["pixel_sum"] is None
-    assert out[3]["ok"] and out[3]["channels"] == 1
 
 
 def test_wav_roundtrip_16bit_stereo():
