@@ -46,7 +46,7 @@ from pyspark.sql import functions as F  # noqa: F401  (callers compose)
 from pyspark.sql import types as T
 
 from open_rust_timeseries_db_spark import session_cache
-from open_rust_timeseries_db_spark.queries.helpers import spread_scan
+from open_rust_timeseries_db_spark.operators.sizing import py_stage_input
 
 # Mersenne prime modulus for the affine MinHash permutation family.
 MH_P = 2305843009213693951  # 2^61 - 1
@@ -254,18 +254,6 @@ def _toks(text) -> list[str]:
     return [w for w in text.split(" ") if w]
 
 
-def _kernel_input(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Spread the scan for kernel parallelism, sized to amortize the
-    Python-worker round trip: half the cores (measured sweet spot for
-    the testdata corpus — 32 tasks over 5k docs pay more in worker
-    latency than they win in parallelism). A multi-split corpus at
-    scale keeps its natural splits (spread_scan no-ops)."""
-    parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    return spread_scan(docs, partitions=max(8, parallelism // 2)).select(
-        id_col, text_col
-    )
-
-
 def shingle_profile_pd(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -341,7 +329,7 @@ def shingle_profile_pd(
                 }
             )
 
-    return _kernel_input(docs, id_col, text_col).mapInPandas(gen, _PROFILE_SCHEMA)
+    return py_stage_input(docs).select(id_col, text_col).mapInPandas(gen, _PROFILE_SCHEMA)
 
 
 def simhash_signatures_pd(
@@ -395,7 +383,7 @@ def simhash_signatures_pd(
                 }
             )
 
-    return _kernel_input(docs, id_col, text_col).mapInPandas(gen, _SIMHASH_SCHEMA)
+    return py_stage_input(docs).select(id_col, text_col).mapInPandas(gen, _SIMHASH_SCHEMA)
 
 
 _WINNOW_SCHEMA = T.StructType(
@@ -479,7 +467,7 @@ def winnow_fp_pd(
                 }
             )
 
-    return _kernel_input(docs, id_col, text_col).mapInPandas(gen, _WINNOW_SCHEMA)
+    return py_stage_input(docs).select(id_col, text_col).mapInPandas(gen, _WINNOW_SCHEMA)
 
 
 _DOC_GRAM_SCHEMA = T.StructType(
@@ -567,7 +555,7 @@ def doc_gram_counts_pd(
                 {"id": "int64", "kind": "int32", "n": "int64"}
             )
 
-    return _kernel_input(docs, id_col, text_col).mapInPandas(
+    return py_stage_input(docs).select(id_col, text_col).mapInPandas(
         gen, _DOC_GRAM_SCHEMA
     )
 

@@ -51,7 +51,6 @@ from open_rust_timeseries_db_spark.functions.text_kernels import (
     shingle_profile_ckpt,
     simhash_signatures_ckpt,
 )
-from open_rust_timeseries_db_spark.queries.helpers import spread_scan
 
 # 16 permutations in 4 bands of 4 rows: P(candidate | jaccard j) =
 # 1 - (1 - j^4)^4 — steep around j ~ 0.5.

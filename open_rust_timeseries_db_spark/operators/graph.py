@@ -21,9 +21,9 @@ mechanics that matter:
 - ``localCheckpoint(eager=True)`` after every round truncates lineage —
   without it the plan tree doubles per iteration and planning time
   explodes by round ~8 (the classic iterative-Spark failure mode).
-- The adjacency list is checkpointed ONCE up front: it is the output of
-  the whole upstream candidate-pair pipeline, and every round joins
-  against it — uncheckpointed, each round would re-run that pipeline.
+- The adjacency list is checkpointed ONCE, before round 1: it is the
+  output of the whole upstream candidate-pair pipeline, and every round
+  joins against it — uncheckpointed, each round would re-run that pipeline.
 - Convergence is detected by the label sum (labels only ever decrease,
   so the sum strictly decreases until the fixpoint), read back as ONE
   scalar per round — no per-node driver traffic.
@@ -46,9 +46,8 @@ from pyspark.sql import functions as F
 # iterative path outright — one collect + O(E α(E)) pointer chasing vs
 # several join+agg rounds that each pay full job scheduling. Beyond it
 # (or with a huge isolated-node set to label), the distributed
-# propagation below is the only shape that survives; the edge list is
-# already checkpointed either way, so the cutover costs one cheap
-# count.
+# propagation below is the only shape that survives. The cutover is
+# one collect of at most cap + 1 edges, which the driver path then uses.
 DRIVER_CC_MAX_EDGES = 5_000_000
 
 
@@ -101,11 +100,15 @@ def connected_components(
             ).alias("__e")
         )
         .select("__e.src", "__e.dst")
-        .localCheckpoint(eager=True)
     )
+    # ONE collect decides the cutover and feeds the driver path: at most
+    # cap + 1 rows come back, so an over-cap list costs a bounded
+    # collect before it is checkpointed for propagation.
+    pdf = adj.limit(DRIVER_CC_MAX_EDGES + 1).toPandas()
+    if len(pdf) <= DRIVER_CC_MAX_EDGES:
+        return _driver_union_find(nodes, pdf, node_col, with_sizes)
+    adj = adj.localCheckpoint(eager=True)
     n_edges = adj.count()
-    if n_edges <= DRIVER_CC_MAX_EDGES:
-        return _driver_union_find(nodes, adj, node_col, with_sizes)
     labels = nodes.select(
         F.col(node_col).alias("node"), F.col(node_col).alias("label")
     ).localCheckpoint(eager=True)
@@ -147,7 +150,7 @@ def connected_components(
 
 
 def _driver_union_find(
-    nodes: DataFrame, adj: DataFrame, node_col: str, with_sizes: bool = False
+    nodes: DataFrame, pdf, node_col: str, with_sizes: bool = False
 ) -> DataFrame:
     """Small-graph fast path: union-find over the collected edge list,
     labels shipped back as a broadcast map onto the (distributed) node
@@ -158,7 +161,7 @@ def _driver_union_find(
     components via the coalesce. Labels are the component-min node id,
     identical to the propagation fixpoint.
 
-    The edge list arrives as ONE Arrow batch per partition
+    ``pdf`` is the edge list (src, dst) collected through Arrow
     (``toPandas``), not a row iterator: at the 5M-edge cutover cap the
     frame is ~80 MB of id pairs — the same budget the cutover already
     assumes — while the Row-object path paid ~8 µs of py4j/Row overhead
@@ -175,7 +178,6 @@ def _driver_union_find(
             parent[x], x = root, parent[x]
         return root
 
-    pdf = adj.toPandas()
     for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
         if a not in parent:
             parent[a] = a

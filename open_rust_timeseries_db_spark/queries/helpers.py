@@ -73,47 +73,6 @@ def conversion_proj_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cached_ckpt(ev, build, ("conversion_proj",))
 
 
-def spread_scan(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Unlock parallelism for CPU-heavy map work over a tiny scan.
-
-    The testdata parquet files are written as a SINGLE row group, so the
-    scan — and every narrow op fused onto it (tokenize, hash, explode)
-    — runs as ONE task regardless of ``maxPartitionBytes``. For
-    pipelines whose map side is the expensive part, a round-robin
-    repartition spreads that work across the executor cores at the cost
-    of shuffling the raw rows once (cheap at small-file size, by
-    definition).
-
-    Gated on the actual scan partition count so it is a NO-OP at scale:
-    a real multi-row-group / multi-file corpus already splits, and the
-    full-data shuffle this would add there is exactly what we avoid.
-    The gate is "would the spread buy >=4x parallelism": a scan already
-    within 4x of the target keeps its natural splits (the shuffle would
-    cost more than the extra fan-out wins), while a scan far below it
-    is by construction byte-small (few splits under a <=128 MB split
-    size), so the one-time shuffle is cheap relative to the CPU-heavy
-    map work that motivated the call. A 100 TB table arrives as
-    thousands of splits and always no-ops.
-
-    The ``df.rdd`` probe materializes a physical plan (~tens of ms);
-    catalog tables are cached per application (sources/catalog.py), so
-    the count is memoized on the DataFrame object itself — one probe
-    per table per session instead of one per query invocation.
-    """
-    if partitions is None:
-        partitions = df.sparkSession.sparkContext.defaultParallelism
-    nparts = getattr(df, "_spread_scan_nparts", None)
-    if nparts is None:
-        nparts = df.rdd.getNumPartitions()
-        try:
-            df._spread_scan_nparts = nparts
-        except AttributeError:  # exotic DataFrame proxy; skip memo
-            pass
-    if nparts * 4 >= partitions:
-        return df
-    return df.repartition(partitions)
-
-
 def _scaled_long(c: Column) -> Column:
     """Per-row fixed-point encode: floor(x*1e6 + 0.5) as BIGINT.
 

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_rust_timeseries_db_spark.operators.multimodal import frame_features
+from open_rust_timeseries_db_spark.operators.sizing import py_stage_input
 from open_rust_timeseries_db_spark.queries.helpers import events_us
 from open_rust_timeseries_db_spark.queries.registry import query
 from open_rust_timeseries_db_spark.sources.catalog import load_table
@@ -206,9 +207,8 @@ def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_image,
         encode_png,
     )
-    from open_rust_timeseries_db_spark.queries.helpers import spread_scan
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    docs = py_stage_input(load_table(spark, sf_dir, "documents"))
 
     schema = T.StructType(
         [
@@ -246,7 +246,7 @@ def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ("doc_id", "width", "height", "channels", "pixel_sum", "ok")}
             )
 
-    return spread_scan(docs).mapInPandas(roundtrip, schema)
+    return docs.select("doc_id").mapInPandas(roundtrip, schema)
 
 
 _WAV_FRAMES = 256
@@ -288,9 +288,8 @@ def q_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_audio,
         encode_wav,
     )
-    from open_rust_timeseries_db_spark.queries.helpers import spread_scan
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    docs = py_stage_input(load_table(spark, sf_dir, "documents"))
 
     schema = T.StructType(
         [
@@ -335,4 +334,4 @@ def q_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                   "amp_sum", "ok")}
             )
 
-    return spread_scan(docs).mapInPandas(roundtrip, schema)
+    return docs.select("doc_id").mapInPandas(roundtrip, schema)

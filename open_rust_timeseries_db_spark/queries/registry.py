@@ -106,8 +106,10 @@ def query(
     session cache per (application, sf_dir), so repeat invocations skip
     Python-side plan construction and re-analysis (~0.1-0.35 s of py4j
     round-trips per build on the wider pipelines) and go straight to
-    execution, which runs fresh on every action exactly as before.
-    This is the plan-cache every long-lived engine keeps for repeated
+    execution. Execution is not fully fresh: an action on the memoized
+    DataFrame reuses the shuffle and broadcast outputs its earlier
+    actions wrote, so only the stages after them run again. This is
+    the plan-cache every long-lived engine keeps for repeated
     queries; the first invocation still pays the full build (bench
     "cold" includes it). Functions that do real work INSIDE the build
     must not be memoized, or a repeat invocation would return a stale

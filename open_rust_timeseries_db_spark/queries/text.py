@@ -20,7 +20,7 @@ from open_rust_timeseries_db_spark.functions.text import (
     tokens,
     tokens_expr,
 )
-from open_rust_timeseries_db_spark.queries.helpers import spread_scan
+from open_rust_timeseries_db_spark.operators.sizing import py_stage_input
 from open_rust_timeseries_db_spark.queries.registry import query
 from open_rust_timeseries_db_spark.sources.catalog import load_table
 
@@ -119,7 +119,7 @@ _LANG_CASE_SQL = """
     tags=("text", "langid"),
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread_scan(load_table(spark, sf_dir, "documents"))
+    docs = py_stage_input(load_table(spark, sf_dir, "documents"))
     # Tokenize ONCE through an intermediate projection: inlining the
     # tokenizer into the four marker counts re-evaluates the split per
     # language (lambda HOFs defeat common-subexpression elimination —
@@ -173,7 +173,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "quality"),
 )
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread_scan(load_table(spark, sf_dir, "documents"))
+    docs = py_stage_input(load_table(spark, sf_dir, "documents"))
     # Tokenize once via an intermediate projection (same rationale as
     # q_lang_id: lambda HOFs defeat CSE, so inlining re-splits per
     # use); selectExpr strings for the same plan-build reason.

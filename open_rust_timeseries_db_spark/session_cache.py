@@ -13,7 +13,10 @@ takes children before their parent.
 Known limitation: an entry assumes the data under its scope does not
 change for the life of the application, so a write into a cached scope
 (``Table.flush_to_parquet``, ``append_time_layout``) is not seen until
-the session restarts.
+the session restarts. Re-running a memoized query plan does not lift
+this: Spark reuses the shuffle and broadcast outputs the plan's first
+action wrote, so a version-keyed memo must build a new DataFrame, not
+re-run the old one.
 """
 
 from __future__ import annotations

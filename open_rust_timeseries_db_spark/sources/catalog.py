@@ -228,22 +228,34 @@ def table_rows(sf_dir: str, name: str) -> int:
     the table can't be counted; callers must treat unknown per their
     own safe direction.
     """
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return footer_rows(
+        [os.path.join(dp, f) for dp, _, fs in os.walk(path) for f in fs
+         if f.endswith(".parquet") and not f.startswith((".", "_"))]
+        if os.path.isdir(path) else [path]
+    )
+
+
+def footer_rows(paths: list[str], stop_at: int | None = None) -> int:
+    """Summed parquet footer row counts of local files (paths or
+    ``file:`` URIs), read until the sum reaches ``stop_at``; -1 when a
+    file read is missing or not parquet."""
     import pyarrow as pa
     import pyarrow.parquet as papq
+    from urllib.parse import unquote, urlparse
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    total = 0
     try:
-        if os.path.isdir(path):
-            return sum(
-                papq.ParquetFile(os.path.join(dp, f)).metadata.num_rows
-                for dp, _, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-        return papq.ParquetFile(path).metadata.num_rows
+        for p in paths:
+            if p.startswith("file:"):
+                p = unquote(urlparse(p).path)
+            total += papq.ParquetFile(p).metadata.num_rows
+            if stop_at is not None and total >= stop_at:
+                break
     except (OSError, pa.ArrowInvalid):
-        # Missing table (FileNotFoundError) or a file that is not parquet.
+        # Missing file (FileNotFoundError) or a file that is not parquet.
         return -1
+    return total
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

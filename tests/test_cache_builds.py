@@ -147,3 +147,34 @@ def test_session_cache_keys_on_app_and_scope(spark, tmp_path, build):
     finally:
         if isinstance(fresh, str):  # a layout copy under the session root
             shutil.rmtree(fresh, ignore_errors=True)
+
+
+def test_memoized_plan_reuses_its_shuffle_outputs(spark, tmp_path):
+    # Running a memoized query again runs the same DataFrame object, and
+    # Spark reuses the shuffle outputs its first action wrote: the second
+    # action runs fewer stages. A write into the scope would therefore
+    # not be seen even by the re-execution (session_cache's limitation).
+    # A fresh scope (a symlink to the tier) so no earlier test ran it.
+    other = tmp_path / "sf"
+    other.symlink_to(SF_DIR)
+    fn = all_queries()["q_distinct_users"].fn
+    df = fn(spark, str(other))
+    assert fn(spark, str(other)) is df
+    sc_ = spark.sparkContext
+    tracker = sc_.statusTracker()
+
+    def stages_run(group: str) -> int:
+        sc_.setJobGroup(group, group)
+        try:
+            df.toPandas()
+        finally:
+            sc_.setLocalProperty("spark.jobGroup.id", None)
+        sc_._jsc.sc().listenerBus().waitUntilEmpty()
+        sids = {s for j in tracker.getJobIdsForGroup(group)
+                for s in tracker.getJobInfo(j).stageIds}
+        return sum(1 for s in sids
+                   if (st := tracker.getStageInfo(s)) and st.numCompletedTasks)
+
+    first = stages_run(f"memo-first-{id(df)}")
+    second = stages_run(f"memo-second-{id(df)}")
+    assert 0 < second < first, (first, second)

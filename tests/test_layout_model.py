@@ -31,7 +31,7 @@ import uuid
 from collections import Counter
 
 import pyarrow.parquet as pq
-from hypothesis import HealthCheck, settings, strategies as st
+from hypothesis import HealthCheck, Phase, settings, strategies as st
 from hypothesis.stateful import (
     RuleBasedStateMachine,
     initialize,
@@ -220,10 +220,14 @@ class LayoutMachine(RuleBasedStateMachine):
 def test_layout_matches_its_row_model(spark, tmp_path):
     run_state_machine_as_test(
         lambda: LayoutMachine(spark, str(tmp_path)),
+        # No shrink (or explain) phase: each shrink step replays its rule
+        # sequence through Spark jobs, so shrinking a failure took minutes
+        # before it was reported; an unshrunk 16-step sequence still reads.
         settings=settings(
             max_examples=10,
             stateful_step_count=16,
             deadline=None,
+            phases=[Phase.explicit, Phase.reuse, Phase.generate],
             suppress_health_check=list(HealthCheck),
         ),
     )

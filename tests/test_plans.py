@@ -324,20 +324,95 @@ def test_kmeans_update_single_aggregation_shuffle(spark, qs):
 def test_codec_queries_zero_data_shuffle(spark, qs):
     """The codec roundtrip queries are pure narrow maps: encode +
     decode + feature extraction all happen inside one Arrow pass. The
-    only permissible Exchange is spread_scan's round-robin repartition
-    of the single-file testdata scan (local-parallelism shim; it
-    no-ops on a multi-split corpus) — and it must carry only the
-    doc_id column, never decoded payloads: a post-kernel shuffle would
-    move binary/feature rows between executors for per-row work."""
+    only permissible Exchange is py_stage_input's round-robin
+    repartition of a scan with fewer splits than its rows need (none at
+    testdata scale) — and it must carry only the doc_id column, never
+    decoded payloads: a post-kernel shuffle would move binary/feature
+    rows between executors for per-row work."""
     for name in ("q_image_decode", "q_audio_decode"):
         df = qs[name].fn(spark, SF_DIR)
         plan = plan_string(df, "simple")
         assert count_exchanges(df) <= 1, f"{name}: {plan}"
-        # The kernel (InPandas) must sit ABOVE the only exchange:
+        # The kernel (InPandas) must sit ABOVE any exchange:
         # everything after the Arrow pass stays task-local.
-        in_pandas = plan.index("InPandas")
-        exchange = plan.index("Exchange")
-        assert in_pandas < exchange, f"{name}: shuffle after kernel\n{plan}"
+        if "Exchange" in plan:
+            in_pandas = plan.index("InPandas")
+            exchange = plan.index("Exchange")
+            assert in_pandas < exchange, f"{name}: shuffle after kernel\n{plan}"
+
+
+@pytest.mark.parametrize("cores", [4, 8, 32])
+def test_py_task_count_is_rows_capped_by_cores(cores):
+    """The Python-stage rule: one task per ROWS_PER_PY_TASK rows, cores
+    only as the cap. Pure, so 32 slots are checked without a 32-slot
+    session: the testdata corpora (500 and 5,000 docs) get 1 and 4
+    tasks on any machine with 4 or more slots."""
+    from open_rust_timeseries_db_spark.operators.sizing import (
+        ROWS_PER_PY_TASK as R,
+        py_task_count,
+    )
+
+    assert py_task_count(-1, cores) == 0  # unknown rows: natural splits
+    assert py_task_count(0, cores) == 0
+    assert py_task_count(1, cores) == 1
+    assert py_task_count(500, cores) == 1
+    assert py_task_count(5_000, cores) == 4
+    assert py_task_count(R + 1, cores) == 2
+    assert py_task_count(3 * R, cores) == min(3, cores)
+    assert py_task_count(cores * R * 10, cores) == cores
+
+
+def test_py_stage_input_repartitions_only_below_the_rule(
+    spark, tmp_path, monkeypatch
+):
+    """A one-split scan of more rows than one task takes is spread to
+    the rule's count, from its footers; a scan already split that far
+    and a local frame (no file, rows unknown) are returned as is."""
+    from open_rust_timeseries_db_spark.operators import sizing
+
+    monkeypatch.setattr(sizing, "ROWS_PER_PY_TASK", 100)
+    path = str(tmp_path / "t.parquet")
+    spark.range(450).coalesce(1).write.parquet(path)
+    one = spark.read.parquet(path)
+    assert one.rdd.getNumPartitions() == 1
+    assert sizing.py_stage_input(one).rdd.getNumPartitions() == 5
+    split = spark.read.parquet(path).repartition(6)
+    assert split.inputFiles()  # still a file scan, 450 footer rows
+    assert sizing.py_stage_input(split) is split
+    local = spark.createDataFrame([(i,) for i in range(450)], "id long")
+    assert sizing.py_stage_input(local) is local
+
+
+@pytest.mark.parametrize(
+    "sf_dir", [SF_DIR, SF_DIR.replace("sf0.001", "sf0.01")],
+    ids=["sf0.001", "sf0.01"],
+)
+def test_python_stage_inputs_follow_the_rule(spark, qs, sf_dir):
+    """Every Python-stage input (the four text kernels, the two JVM
+    text passes that share their sizing, the two codec queries) runs
+    at most the rule's task count: no round-robin spread to a
+    core-derived target, whatever the slot count."""
+    from open_rust_timeseries_db_spark.functions import text_kernels as tk
+    from open_rust_timeseries_db_spark.operators.sizing import py_task_count
+    from open_rust_timeseries_db_spark.sources.catalog import table_rows
+
+    docs = load_table(spark, sf_dir, "documents")
+    bound = max(1, py_task_count(
+        table_rows(sf_dir, "documents"),
+        spark.sparkContext.defaultParallelism,
+    ))
+    inputs = {
+        "shingle_profile_pd": tk.shingle_profile_pd(docs, n_perms=16),
+        "simhash_signatures_pd": tk.simhash_signatures_pd(docs),
+        "winnow_fp_pd": tk.winnow_fp_pd(docs),
+        "doc_gram_counts_pd": tk.doc_gram_counts_pd(docs),
+    }
+    for name in ("q_lang_id", "q_quality_score",
+                 "q_image_decode", "q_audio_decode"):
+        inputs[name] = qs[name].fn(spark, sf_dir)
+    for name, df in inputs.items():
+        n = df.rdd.getNumPartitions()
+        assert n <= bound, f"{name}: {n} partitions > {bound}"
 
 
 def test_semantic_dedup_blocks_on_centroid(spark, qs):
