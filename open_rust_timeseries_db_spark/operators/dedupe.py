@@ -47,7 +47,6 @@ from open_rust_timeseries_db_spark.functions.text_kernels import (
     ensure_materialized,
     mark_count,
     shingle_hashes_ckpt,
-    shingle_profile_pd,
     shingle_profile_ckpt,
     simhash_signatures_ckpt,
 )
@@ -139,35 +138,6 @@ def _spread(groups: DataFrame) -> DataFrame:
     return groups.repartition(_EXPAND_PARTITIONS)
 
 
-def shingle_profile(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document shingle profile, one narrow Arrow pass (no shuffle):
-    (id, hs: array<bigint> of distinct 3-shingle md5-64 ids, n_sh,
-    sig_0..sig_P-1 min-hash signatures).
-
-    sig_i = min over the doc's distinct shingles of the i-th affine
-    universal-hash permutation (A_i*h + B_i mod 2^61-1 over the 32-bit
-    md5 base hash — functions/text_kernels.MH_AB). The md5 family
-    replaced round 1's JVM xxhash64 HOF fold: identical pipeline shape
-    and banding behavior, ~5x faster (the HOF chain was interpreted
-    per element on the JVM; the kernel hashes each unique shingle once
-    per Arrow batch in C-backed code), and — because DuckDB can compute
-    the identical md5/affine values — the downstream LSH pipeline
-    (q_dedup_near) is now oracle-checked instead of rows-only.
-
-    Documents with no shingle (< 3 tokens) produce no row, matching the
-    exploded/grouped formulation.
-    """
-    prof = shingle_profile_pd(docs, id_col, text_col, n=3, n_perms=MINHASH_PERMS)
-    return prof.select(
-        "id",
-        "hs",
-        "n_sh",
-        *[F.col("sigs")[i].alias(f"sig_{i}") for i in range(MINHASH_PERMS)],
-    )
-
-
 def _expand_pairs(
     groups: DataFrame, fields: list[str], keys: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -232,145 +202,11 @@ SALT_MAX_SPLITS = 64
 SALT_MIN_SOURCE_ROWS = 1_000_000
 
 
-def cms_size_key(keys: tuple[str, ...]):
-    """The synthetic single-column key the CMS size grid is built and
-    probed on: one xxhash64 over the group-key tuple (seeded so it
-    cannot collide with the salt hash). Builder and prober MUST share
-    this construction — both call here."""
-    return F.xxhash64(*keys, F.lit(41))
-
-
-# Size-grid geometry. Depth matches operators/sketches.py; WIDTH is
-# the lever that matters for SIZING (as opposed to point estimation):
-# with threshold T = SALT_BUCKET_MIN_ROWS and N member rows, the
-# per-cell collision floor is ~N/width — if that floor approaches T,
-# EVERY bucket estimates hot and the whole stream gets replicated
-# (measured: the fixed 4096-wide grid at the sf1 shingle tier,
-# N = 15M, floored every estimate ~3.7k and blew q_ngram_jaccard's
-# cold from 23 s to 56 s). Width therefore scales as 8N/T (floor 8x
-# under the threshold), capped at 4M cells (~96 MB grid worst-case,
-# broadcastable); past the cap the effective detection threshold
-# degrades gracefully to 8N/width_cap — at that N, only buckets big
-# enough to genuinely serialize a stage clear it anyway.
-SALT_CMS_DEPTH = 4
-SALT_CMS_MIN_WIDTH = 4096
-SALT_CMS_MAX_WIDTH = 1 << 22
-
-
-def _salt_cms_width(n_member_rows: int | None) -> int:
-    w = SALT_CMS_MIN_WIDTH
-    if n_member_rows:
-        target = 8 * n_member_rows // max(1, SALT_BUCKET_MIN_ROWS)
-        while w < target and w < SALT_CMS_MAX_WIDTH:
-            w <<= 1
-    return w
-
-
-def _salt_cell(key_h, j: int, width: int):
-    """Row-j cell for the size grid. xxhash64, NOT the md5-affine
-    family of operators/sketches.py: this grid is engine-internal
-    (never oracle-compared), and the probe runs per member row in the
-    hot path — 4 md5-of-string evaluations per row were measurable at
-    the 15M-row tier, 4 xxhash64 are not."""
-    return F.pmod(F.xxhash64(key_h, F.lit(1009 + j)), F.lit(width)).cast(
-        "int"
-    )
-
-
-def cms_size_grid(
-    members: DataFrame,
-    keys: tuple[str, ...],
-    n_member_rows: int | None = None,
-) -> DataFrame:
-    """Count-min grid over ``members``' group keys, for
-    :func:`salted_group_pairs`' ``cms_grid`` parameter.
-
-    Built once per corpus (session-cached by callers, a cache_builds
-    line in the bench): the per-query salted plan then SIZES buckets by
-    probing this bounded grid map-side instead of paying the exact
-    groupBy(keys).count() shuffle — at cluster scale that exact pass
-    shuffles one row per distinct bucket (billions for shingle-grained
-    keys), while the grid is depth x width rows however many buckets
-    exist. Estimates are ONE-SIDED (>= exact), so a hot bucket is
-    never missed; a collision-inflated estimate can only over-split a
-    cold bucket, which costs replication, never correctness
-    (exactly-once pair semantics are independent of S). Pass the
-    member row count so the width scales with N/threshold (see
-    geometry note above); the chosen width rides the returned
-    DataFrame as ``_salt_cms_width`` for the probe side.
-    """
-    width = _salt_cms_width(n_member_rows)
-    key_h = cms_size_key(keys)
-    cells = members.select(
-        F.posexplode(
-            F.array(
-                *[_salt_cell(key_h, j, width) for j in range(SALT_CMS_DEPTH)]
-            )
-        ).alias("j", "cell")
-    )
-    grid = cells.groupBy("j", "cell").agg(F.count(F.lit(1)).alias("c"))
-    grid._salt_cms_width = width
-    return grid
-
-
-# Member-row bar for CMS-sized (vs exact-counted) bucket sizing. The
-# grid's value is BOUNDED SIZING STATE: the exact groupBy(keys).count()
-# holds one agg entry per distinct bucket (trillions for shingle keys
-# at 100 TB), while the grid is fixed cells. But the probe pays 4
-# xxhash64 joins PER MEMBER ROW, and below this bar that per-row cost
-# exceeds what the skinny count shuffle costs (measured at the sf1
-# shingle tier, 15M member rows / 2.6M keys: +25% warm and a one-time
-# +28 s broadcast/codegen hit under the bench's 4 MB-advisory AQE
-# config — interleaved A/B in the default config was a wash). The
-# hot10k scale tier passes a grid explicitly and measures parity with
-# exact sizing, so the cutover only changes WHO computes sizes, never
-# the pairs.
-SALT_CMS_MIN_MEMBER_ROWS = 50_000_000
-
-
-def _salt_grid_ckpt(
-    src: DataFrame,
-    skinny_members: DataFrame,
-    keys: tuple[str, ...],
-    n_member_rows: int | None,
-    tag: str,
-) -> DataFrame | None:
-    """Session-cached CMS size grid for a salted pair expansion — or
-    ``None`` below SALT_CMS_MIN_MEMBER_ROWS (the regime where exact
-    counting is cheaper than per-row probing; the salting machinery
-    itself then sizes from exact counts). ``src`` is the
-    session-stable ckpt anchor (the cached profile/shingle table);
-    ``skinny_members`` is the key-only projection the grid counts.
-    """
-    if n_member_rows is not None and n_member_rows < SALT_CMS_MIN_MEMBER_ROWS:
-        return None
-    from open_rust_timeseries_db_spark.functions.text_kernels import (
-        _cached_ckpt,
-    )
-
-    # Width is part of the CACHE KEY: a session that later sizes the
-    # same tag from a different n_member_rows must not get a grid
-    # built at another width and then probe it at the new one (the
-    # mis-probe collapses estimates toward 0 and hot buckets silently
-    # go unsalted). Keyed this way, the stamped width is consistent
-    # with the stored grid by construction — no re-derive fallback.
-    width = _salt_cms_width(n_member_rows)
-    grid = _cached_ckpt(
-        src,
-        lambda: cms_size_grid(skinny_members, keys, n_member_rows),
-        ("salt_cms_grid", tag, width),
-    )
-    grid._salt_cms_width = width
-    return grid
-
-
 def salted_group_pairs(
     members: DataFrame,
     keys: tuple[str, ...],
     fields: list[str],
     n_member_rows: int | None = None,
-    cms_grid: DataFrame | None = None,
-    cms_width: int | None = None,
 ) -> DataFrame:
     """Ordered-pair expansion of ``members`` (keys..., id, fields...)
     within each ``keys`` group, robust to hot groups.
@@ -392,18 +228,13 @@ def salted_group_pairs(
     O(SALT_TARGET_ROWS^2); replication multiplies the hot rows by S,
     which is the standard triangle-replication trade (pairs >> rows).
 
+    Bucket sizes c come from one exact groupBy(keys).count() over the
+    key columns; only the hot buckets' counts are broadcast back onto
+    the members.
+
     ``n_member_rows`` (a memoized count, never a job) gates the whole
     machinery: below SALT_MIN_SOURCE_ROWS a salting-sized bucket
     cannot exist and the single-branch grouped plan runs unchanged.
-
-    ``cms_grid`` (optional, from :func:`cms_size_grid`, session-cached
-    by the caller): bucket sizes come from the one-sided count-min
-    estimate instead of an exact groupBy(keys).count() — the sizing
-    pass then probes a bounded broadcast grid map-side, dropping the
-    per-query key-cardinality count shuffle entirely
-    (plan-census-tested in tests/test_skew.py). Hot buckets are never
-    missed (estimates only overcount); an inflated estimate
-    over-splits, which is replication cost, not a correctness risk.
     """
     klist = list(keys)
     if n_member_rows is not None and n_member_rows < SALT_MIN_SOURCE_ROWS:
@@ -411,59 +242,13 @@ def salted_group_pairs(
             F.collect_list(F.struct("id", *fields)).alias("ms")
         )
         return _expand_pairs(groups, fields)
-    if cms_grid is not None:
-        # Per-row size estimate: depth broadcast probes of the bounded
-        # grid (members never shuffle for sizing). est is a pure
-        # function of the key tuple, so every row of a bucket lands in
-        # the same branch with the same S — the invariant the
-        # exactly-once filter relies on.
-        #
-        # The probe MUST use the width the grid was BUILT at: probing a
-        # wider grid's cells modulo a smaller width collapses estimates
-        # toward 0 and hot buckets silently go unsalted — the exact
-        # failure this machinery exists to prevent. Width comes from
-        # the explicit ``cms_width`` parameter or the attribute
-        # ``cms_size_grid`` stamps on the DataFrame; a grid that lost
-        # the attribute (transformed, deserialized) is an ERROR, never
-        # a silent fallback.
-        width = cms_width or getattr(cms_grid, "_salt_cms_width", None)
-        if not width:
-            raise ValueError(
-                "cms_grid carries no build width: pass cms_width= "
-                "explicitly or use a DataFrame returned by "
-                "cms_size_grid/_salt_grid_ckpt (the _salt_cms_width "
-                "attribute does not survive DataFrame transformations)"
-            )
-        key_h = cms_size_key(keys)
-        m = members
-        probes = []
-        for j in range(SALT_CMS_DEPTH):
-            gj = F.broadcast(
-                cms_grid.filter(F.col("j") == j).select(
-                    F.col("cell").alias(f"__gc{j}"),
-                    F.col("c").alias(f"__gn{j}"),
-                )
-            )
-            m = m.join(
-                gj, _salt_cell(key_h, j, width) == F.col(f"__gc{j}"), "left"
-            ).drop(f"__gc{j}")
-            probes.append(F.coalesce(F.col(f"__gn{j}"), F.lit(0)))
-        est = F.least(*probes)
-        m = (
-            m.withColumn(
-                "__c",
-                F.when(est > SALT_BUCKET_MIN_ROWS, est),
-            )
-            .drop(*[f"__gn{j}" for j in range(SALT_CMS_DEPTH)])
-        )
-    else:
-        sizes = (
-            members.select(*klist)
-            .groupBy(*klist)
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .filter(F.col("__c") > SALT_BUCKET_MIN_ROWS)
-        )
-        m = members.join(F.broadcast(sizes), klist, "left")
+    sizes = (
+        members.select(*klist)
+        .groupBy(*klist)
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .filter(F.col("__c") > SALT_BUCKET_MIN_ROWS)
+    )
+    m = members.join(F.broadcast(sizes), klist, "left")
     cold_groups = (
         m.filter(F.col("__c").isNull())
         .drop("__c")
@@ -654,18 +439,12 @@ def minhash_neardup(
         ).selectExpr("bb.band AS band", "bb.bucket AS bucket", "id", "hs", "n_sh")
         # Same exact ratio prune, before the array-fat pair rows hit
         # the dedup shuffle.
-        n_band_rows = cached_count(prof) * MINHASH_BANDS
-        skinny_bands = bands.select("band", "bucket")
         pairs = (
             salted_group_pairs(
                 bands,
                 ("band", "bucket"),
                 ["hs", "n_sh"],
-                n_member_rows=n_band_rows,
-                cms_grid=_salt_grid_ckpt(
-                    prof, skinny_bands, ("band", "bucket"), n_band_rows,
-                    "minhash_bands",
-                ),
+                n_member_rows=cached_count(prof) * MINHASH_BANDS,
             )
             .filter(_ratio_keep(F.col("n_sh_a"), F.col("n_sh_b")))
             .dropDuplicates(["a", "b"])
@@ -691,44 +470,19 @@ def minhash_neardup(
 
 def exact_jaccard(
     docs: DataFrame,
-    pairs: DataFrame | None,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Exact shingle-set Jaccard per document pair.
+    """Exact shingle-set Jaccard for every document pair sharing a
+    shingle: (a, b, n_inter, n_a, n_b, jaccard).
 
-    With ``pairs=None`` the shingle equi-join itself generates the pairs
-    — only documents sharing at least one shingle ever meet, so there is
-    no N^2 blow-up. Set sizes ride through both shuffles inside the
-    grouped structs (deriving them separately and joining would re-run
-    the tokenizer once per join side). All integer set arithmetic, so
-    the similarity is engine-deterministic.
-
-    With ``pairs`` given, verifies exactly those candidates via the
-    array-carrying path (see :func:`minhash_neardup` for the fused
-    LSH + verify pipeline, which is the scale path).
+    The shingle equi-join itself generates the pairs — only documents
+    sharing at least one shingle ever meet, so there is no N^2 blow-up.
+    Set sizes ride through the shuffles alongside the shingle ids
+    (deriving them separately and joining would re-run the tokenizer
+    once per join side). All integer set arithmetic, so the similarity
+    is engine-deterministic.
     """
-    if pairs is not None:
-        prof = shingle_profile(docs, id_col, text_col)
-        a_side = prof.select(
-            F.col("id").alias("a"), F.col("hs").alias("hs_a"), F.col("n_sh").alias("n_a")
-        )
-        b_side = prof.select(
-            F.col("id").alias("b"), F.col("hs").alias("hs_b"), F.col("n_sh").alias("n_b")
-        )
-        joined = pairs.join(a_side, "a").join(b_side, "b")
-        n_inter = F.size(F.array_intersect("hs_a", "hs_b")).cast("bigint")
-        return joined.select(
-            "a",
-            "b",
-            n_inter.alias("n_inter"),
-            "n_a",
-            "n_b",
-            (
-                n_inter.cast("double")
-                / (F.col("n_a") + F.col("n_b") - n_inter)
-            ).alias("jaccard"),
-        )
     # Pair generation: the shingle equi-join IS the candidate
     # generator — only documents sharing a shingle ever meet. The
     # exploded (id, n_sh, shingle-id) rows come straight from the Arrow
@@ -776,10 +530,6 @@ def exact_jaccard(
                 ("hs",),
                 ["n_sh"],
                 n_member_rows=cached_count(sh),
-                cms_grid=_salt_grid_ckpt(
-                    sh, sh.select("hs"), ("hs",), cached_count(sh),
-                    "shingles",
-                ),
             )
             .groupBy("a", "b", "n_sh_a", "n_sh_b")
             .agg(F.count(F.lit(1)).alias("n_inter"))

@@ -11,7 +11,7 @@ ONE-SIDED: est(k) >= exact(k) always (a key's own rows always land in
 its cells), and est(k) <= exact(k) + e*N/WIDTH with probability
 1 - e^-DEPTH per the standard Markov argument. That one-sidedness is
 what makes it safe for skew decisions — a key the sketch calls cold IS
-cold (salting gates such as operators/dedupe.py's never miss a hot key).
+cold (q_event_funnel's bounded-state gate never misses a hot user).
 
 Hashing is the repo's md5-affine family (functions/text_kernels.py
 uses the same construction) — NOT xxhash64 — so a DuckDB oracle
@@ -42,9 +42,8 @@ def cms_width_for(n_rows: int | None, threshold: int) -> int:
     Scale width so the floor sits >=8x below the threshold — width =
     next power of two >= 8*n_rows/threshold — floored at CMS_WIDTH and
     capped at CMS_MAX_WIDTH (past the cap only keys genuinely near the
-    threshold clear it anyway). Same geometry as the salt size grid
-    (operators/dedupe._salt_cms_width, measured there at the 15M-row
-    tier). ``None``/unknown row counts keep the default width.
+    threshold clear it anyway). ``None``/unknown row counts keep the
+    default width.
     """
     w = CMS_WIDTH
     if n_rows:

@@ -453,9 +453,9 @@ def _heavy_hitters_oracle() -> str:
 @query(
     "q_heavy_hitters",
     _heavy_hitters_oracle(),
-    doc="Count-min heavy hitters: the hot-key detector that sizes skew "
-    "mitigation (the salted grouped pairs, the LSH hot-bucket splits) "
-    "before a 100 TB join. The sketch grid is DEPTH x WIDTH cells "
+    doc="Count-min heavy hitters: the hot-key detector a skew gate "
+    "consults (q_event_funnel's bounded-state shape) before a 100 TB "
+    "join. The sketch grid is DEPTH x WIDTH cells "
     "regardless of input size, builds in one fully-parallel pass "
     "(map-side combine collapses each task to the grid before the "
     "shuffle) and merges by cell-wise addition. Estimates are "
@@ -478,8 +478,8 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     keys = ev.select("user_id")
     # The grid is SESSION STATE, not per-query work: a deployment
-    # maintains the user-key CMS at ingest (it already sizes the
-    # salting machinery and the funnel's shape gate), so the query
+    # maintains the user-key CMS at ingest (it already feeds the
+    # funnel's shape gate), so the query
     # pays only its probes + the exact verification yardstick. Fixed
     # PARITY width — the oracle rebuilds cells at CMS_WIDTH — shared
     # with the funnel gate's cache entry wherever cms_width_for

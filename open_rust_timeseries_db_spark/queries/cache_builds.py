@@ -137,12 +137,6 @@ def cache_builders(
         # memoized driver-side once per session; two small jobs over
         # cached tables that otherwise land on q_bm25_rank's cold.
         "bm25_scalars": _bm25_scalars_builder(spark, sf_dir),
-        # Count-min size grid over the exploded shingle keys: the
-        # salted pair expansion in exact_jaccard sizes buckets from it
-        # map-side instead of an exact count shuffle — built only at
-        # tiers where the salting gate can engage (the gate mirrors
-        # salted_group_pairs'), else a zero-cost no-op line.
-        "shingle_salt_cms": lambda: _shingle_salt_cms_rows(spark, sf_dir),
         # Count-min skew sketch over events.user_id (bounded grid):
         # q_event_funnel's shape gate reads a one-sided hot-user bound
         # from it; one map-side-combined pass, grid <= depth x width.
@@ -174,20 +168,6 @@ def cache_builders(
         "ohlc_hourly": lambda: _ohlc_hourly_rows(spark, sf_dir),
     }
     return builders
-
-
-def _shingle_salt_cms_rows(spark: SparkSession, sf_dir: str) -> int:
-    import open_rust_timeseries_db_spark.operators.dedupe as dd
-    from open_rust_timeseries_db_spark.functions.text_kernels import (
-        cached_count,
-        shingle_hashes_ckpt,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_hashes_ckpt(docs, "doc_id", "text")
-    n = cached_count(sh)
-    grid = dd._salt_grid_ckpt(sh, sh.select("hs"), ("hs",), n, "shingles")
-    return 0 if grid is None else cached_count(grid)
 
 
 def _user_cms_rows(spark: SparkSession, sf_dir: str) -> int:

@@ -178,7 +178,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    all_pairs = exact_jaccard(docs, pairs=None)  # pair source = shingle join
+    all_pairs = exact_jaccard(docs)  # pair source = shingle join
     return all_pairs.filter(F.col("n_inter") >= 2).select(
         "a", "b", "n_inter", "n_a", "n_b", "jaccard"
     )

@@ -67,28 +67,34 @@ def _single_task_sort_or_window(plan: str) -> bool:
     return False
 
 
+def audit_entry(spark, sf_dir: str, spec) -> dict:
+    """One registered query's PLAN_AUDIT.json entry: the census of the
+    plan its (unmemoized) builder returns, or a marker for streaming and
+    iterative queries, whose plans are not audited."""
+    if {"streaming", "iterative"} & set(spec.tags):
+        return {"kind": "streaming_or_iterative_not_plan_audited"}
+    df = getattr(spec.fn, "__wrapped__", spec.fn)(spark, sf_dir)
+    p = plan_string(df)
+    return {
+        "exchanges": count_exchanges(df),
+        "broadcast_hash_join": has_broadcast_hash_join(df),
+        "bnlj": "BroadcastNestedLoopJoin" in p,
+        "cartesian": "CartesianProduct" in p,
+        "python_eval": has_python_eval(df),
+        "pushed_filters": len([f for f in pushed_filters(df) if f]),
+        "scan_schemas": read_schemas(df),
+        "single_task_sort_or_window": _single_task_sort_or_window(p),
+    }
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     out_name = sys.argv[2] if len(sys.argv) > 2 else "PLAN_AUDIT.json"
     spark = get_spark()
-    audit: dict[str, dict] = {}
-    for name, spec in sorted(all_queries().items()):
-        if {"streaming", "iterative"} & set(spec.tags):
-            audit[name] = {"kind": "streaming_or_iterative_not_plan_audited"}
-            continue
-        fn = getattr(spec.fn, "__wrapped__", spec.fn)
-        df = fn(spark, sf_dir)
-        p = plan_string(df)
-        audit[name] = {
-            "exchanges": count_exchanges(df),
-            "broadcast_hash_join": has_broadcast_hash_join(df),
-            "bnlj": "BroadcastNestedLoopJoin" in p,
-            "cartesian": "CartesianProduct" in p,
-            "python_eval": has_python_eval(df),
-            "pushed_filters": len([f for f in pushed_filters(df) if f]),
-            "scan_schemas": read_schemas(df),
-            "single_task_sort_or_window": _single_task_sort_or_window(p),
-        }
+    audit = {
+        name: audit_entry(spark, sf_dir, spec)
+        for name, spec in sorted(all_queries().items())
+    }
     out = {
         "policy": (
             "per-query physical-plan census at sf0.001 (plans are "

@@ -137,7 +137,7 @@ def main() -> None:
     def skew_ops():
         return {
             "skew_minhash_neardup": lambda: dd.minhash_neardup(sk),
-            "skew_exact_jaccard": lambda: dd.exact_jaccard(sk, None),
+            "skew_exact_jaccard": lambda: dd.exact_jaccard(sk),
             "skew_simhash_pairs": lambda: dd.simhash_pairs(
                 dd.simhash_signatures(sk)
             ),
@@ -206,7 +206,7 @@ def main() -> None:
     )
     n_hot_rows = hot_m.count()
 
-    def run_pairs(n_member_rows, cms_grid=None) -> tuple[float, int]:
+    def run_pairs(n_member_rows) -> tuple[float, int]:
         # Timed action is a noop WRITE, not count(): count() fuses the
         # pair explosion into a codegen'd counter that never
         # materializes a row, under-measuring the hot bucket's
@@ -216,8 +216,7 @@ def main() -> None:
         # write-path number is the one that scales.
         def mk():
             return dd.salted_group_pairs(
-                hot_m, ("g",), [], n_member_rows=n_member_rows,
-                cms_grid=cms_grid,
+                hot_m, ("g",), [], n_member_rows=n_member_rows
             )
 
         n = mk().count()  # parity check only, untimed
@@ -232,16 +231,6 @@ def main() -> None:
     # gate); the real count engages the production salting path.
     hot10k_unsalted = run_pairs(0)
     hot10k_salted = run_pairs(n_hot_rows)
-    # CMS-sized salted path: sizing probes a session-cached bounded
-    # grid map-side instead of paying the exact groupBy(key).count()
-    # shuffle (the ingest-maintained-artifact deployment shape).
-    hot_grid = dd.cms_size_grid(hot_m, ("g",), n_hot_rows).persist()
-    hot_grid.count()
-    hot10k_cms = run_pairs(n_hot_rows, cms_grid=hot_grid)
-    assert hot10k_unsalted[1] == hot10k_cms[1], (
-        "hot10k CMS-sized pair parity broke: "
-        f"{hot10k_unsalted[1]} vs {hot10k_cms[1]}"
-    )
     assert hot10k_unsalted[1] == hot10k_salted[1], (
         "hot10k pair parity broke: "
         f"{hot10k_unsalted[1]} vs {hot10k_salted[1]}"
@@ -333,19 +322,12 @@ def main() -> None:
                 "Timed action = noop write (real row materialization, "
                 "like any downstream consumer); count() would fuse the "
                 "explosion into a codegen counter and hide the "
-                "single-task bottleneck (~12x, measured). The "
-                "salted_cms_sized row replaces the exact sizing "
-                "shuffle with map-side probes of a pre-built bounded "
-                "count-min grid (cms_size_grid) — the ingest-"
-                "maintained-artifact deployment shape; one-sided "
-                "estimates can only over-split, never miss a hot "
-                "bucket, and pair parity is asserted for it too."
+                "single-task bottleneck (~12x, measured)."
             ),
             "rows": n_hot_rows,
             "pairs": hot10k_unsalted[1],
             "unsalted_grouped_warm_sec": hot10k_unsalted[0],
             "salted_production_warm_sec": hot10k_salted[0],
-            "salted_cms_sized_warm_sec": hot10k_cms[0],
             "salted_speedup": round(
                 hot10k_unsalted[0] / hot10k_salted[0], 2
             )

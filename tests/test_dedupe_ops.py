@@ -14,18 +14,24 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from open_rust_timeseries_db_spark.functions.text import tokens, word_shingles
-from open_rust_timeseries_db_spark.functions.text_kernels import MH_AB, MH_P
-from open_rust_timeseries_db_spark.operators.dedupe import (
-    MINHASH_PERMS,
-    shingle_profile,
+from open_rust_timeseries_db_spark.functions.text_kernels import (
+    MH_AB,
+    MH_P,
+    shingle_profile_ckpt,
 )
+from open_rust_timeseries_db_spark.operators.dedupe import MINHASH_PERMS
 from open_rust_timeseries_db_spark.sources.catalog import load_table
 from tests.conftest import SF_DIR
 
 
 def test_minhash_signatures_match_grouped_truth(spark):
     docs = load_table(spark, SF_DIR, "documents")
-    prof = {r["id"]: r for r in shingle_profile(docs).collect()}
+    prof = {
+        r["id"]: r["sigs"]
+        for r in shingle_profile_ckpt(docs, n_perms=MINHASH_PERMS)
+        .select("id", "sigs")
+        .collect()
+    }
 
     base = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("bigint")
     exploded = docs.select(
@@ -41,7 +47,7 @@ def test_minhash_signatures_match_grouped_truth(spark):
     assert len(truth_rows) == len(prof)
     n_distinct_total = 0
     for t in truth_rows:
-        got = [prof[t["id"]][f"sig_{i}"] for i in range(MINHASH_PERMS)]
+        got = list(prof[t["id"]])
         want = [t[f"t{i}"] for i in range(MINHASH_PERMS)]
         assert got == want, f"doc {t['id']}: sigs diverge from grouped truth"
         n_distinct_total += len(set(got))
@@ -221,7 +227,7 @@ def test_hot_bucket_skew_paths_agree(spark, monkeypatch):
     def run_all():
         return {
             "near": {tuple(r) for r in dd.minhash_neardup(sk).collect()},
-            "ej": {tuple(r) for r in dd.exact_jaccard(sk, None).collect()},
+            "ej": {tuple(r) for r in dd.exact_jaccard(sk).collect()},
             "sh": {
                 tuple(r)
                 for r in dd.simhash_pairs(dd.simhash_signatures(sk)).collect()
@@ -244,10 +250,6 @@ def test_hot_bucket_skew_paths_agree(spark, monkeypatch):
     monkeypatch.setattr(dd, "SALT_MIN_SOURCE_ROWS", 0)
     monkeypatch.setattr(dd, "SALT_BUCKET_MIN_ROWS", 8)
     monkeypatch.setattr(dd, "SALT_TARGET_ROWS", 4)
-    # Also lower the CMS-sizing bar so the end-to-end sweep exercises
-    # the grid-probed sizing path (its production bar sits beyond any
-    # test tier by design).
-    monkeypatch.setattr(dd, "SALT_CMS_MIN_MEMBER_ROWS", 0)
     salted = run_all()
     for k in broadcast:
         assert broadcast[k] == salted[k], (
