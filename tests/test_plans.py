@@ -556,12 +556,11 @@ def test_no_cartesian_products_and_bnlj_allowlisted(spark, qs):
 
 def test_plan_audit_artifact_covers_registry(spark, qs):
     """PLAN_AUDIT.json must cover exactly the registered queries, and
-    each audited query's committed entry must be what
-    scripts/plan_audit.py's census reads from the code today (all but
-    the Exchange count) — a
-    registry or plan change without `python scripts/plan_audit.py`
-    fails here (the invariants themselves are asserted live by the
-    gates above; this keeps the committed census from rotting)."""
+    each committed entry must be what scripts/plan_audit.py's census
+    reads from the code today (all but the Exchange count) — a registry
+    or plan change without `python scripts/plan_audit.py` fails here
+    (the invariants themselves are asserted live by the gates above;
+    this keeps the committed census from rotting)."""
     import importlib.util
     import json
     from pathlib import Path
@@ -582,8 +581,8 @@ def test_plan_audit_artifact_covers_registry(spark, qs):
         # The Exchange count is left out: once an earlier test has run
         # a session-cached input, its in-memory relation renders the
         # executed adaptive plan with extra Exchange nodes, so the count
-        # depends on test order (q_simhash reads 6 here against the 3 a
-        # fresh session records).
+        # depends on test order (q_simhash read 6 in a full test run
+        # against the 3 a fresh session records).
         return {k: v for k, v in entry.items() if k != "exchanges"}
 
     stale = {
